@@ -76,8 +76,8 @@ object CowScaleProbe {
     if (sections("takedown")) {
     println("rep,n_docs,layout,init_sec,takedown_sec,gen_bytes,corpus_bytes")
     reps.foreach { rep =>
-      // replicate with disjoint ids (the ScaleProbe idiom: content
-      // replicates, ids stay unique)
+      // replicate with disjoint ids: content replicates, ids stay
+      // unique
       val corpus = (0 until rep).map(i =>
           docs.select((col("doc_id") + lit(i.toLong * 10000000L))
             .as("doc_id"), col("text")))

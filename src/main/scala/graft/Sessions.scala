@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Session builders with the engine's recommended configuration.
   *
-  * The driver contract builds its own sessions (Verify/Bench); this is
+  * The driver contract builds its own sessions (Verify); this is
   * the front door for library users, encoding the 100 TB-oriented
   * defaults so they don't have to rediscover them:
   *
@@ -20,23 +20,29 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** The runtime (session-modifiable) confs, shared by [[builder]]
+    * and [[local]] so the two cannot drift apart.
+    */
+  private[graft] def runtimeConfs(shufflePartitions: Int): Seq[(String, String)] = Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
+    "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   def builder(appName: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(runtimeConfs(shufflePartitions).toMap)
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
 
   /** Local session for tests/exploration.
     *
     * getOrCreate returns a pre-existing session if the JVM already has
-    * one, and STATIC confs (spark.sql.extensions, master, nanosAsLong)
-    * are then silently ignored — so the graft functions are registered
+    * one, and STATIC confs (spark.sql.extensions, master) are then
+    * silently ignored — so the graft functions are registered
     * explicitly (idempotent) and the runtime confs re-applied, making
     * the promised surface available either way.
     */
@@ -45,14 +51,7 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     GraftExtensions.register(s)
-    Seq(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.shuffle.partitions" -> cores.toString,
-      "spark.sql.session.timeZone" -> "UTC",
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true"
-    ).foreach { case (k, v) => s.conf.set(k, v) }
+    runtimeConfs(cores).foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
 }

@@ -1,91 +1,37 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Synthetic scale-up of the test corpus (round 17 — r16 missing
-  * item 4 / next-task 6): the driver ships sf0.001/0.01/0.1; the
-  * design point is ~100 TB. [[PipelineSfScaleProbe]] proved the
-  * replication shape for `documents` in round 16 (and its 100x run
-  * caught two real defects); this object extracts that shape and
-  * extends it to EVERY table so the whole bench surface can run at a
-  * synthetic sf1.0 ([[BenchSf1]]).
+/** Synthetic scale-up of the `documents` table: the driver ships
+  * sf0.001/0.01/0.1; the design point is ~100 TB. A 100× run of the
+  * pipeline on this replication shape caught two real defects (a
+  * BIGINT overflow in the d17 sample hash and c03's quadratic probe
+  * scoring; see `queries.PipelineShared`).
   *
-  * Replication contracts, per table family:
-  *
-  *  - `documents` — per-copy deterministic WORD SHUFFLE (each copy's
-  *    words sort by xxhash64(word, copy)): the token MULTISET is
-  *    invariant, so every multiset-derived metric (quality score,
-  *    dup-word fraction, stopword ratios, token counts) scores each
-  *    copy exactly like its original and curation filters pass rep×
-  *    the mass; word ORDER differs per copy, so shingle sets
-  *    decorrelate and near-dup candidate mass stays that of fresh
-  *    data. The id shift (10⁸, a multiple of 40) preserves every
-  *    doc_id-modulus plant density (eval splits at %10, edit plants
-  *    at %20/%40). Round-16 probe scaladoc has the full argument.
-  *  - `embeddings` — id shift only: vectors replicate as-is (ANN
-  *    throughput depends on corpus size and dimension, not vector
-  *    novelty; exact-duplicate neighbors only make top-k ties, which
-  *    the timed path breaks deterministically anyway).
-  *  - fact tables (`orders`/`lineitem`/`events`) — key shifts kept
-  *    CONSISTENT across tables (copy i of lineitem points at copy i
-  *    of orders/part/supplier), so every join's fan-out and
-  *    selectivity is scale-invariant; timestamps replicate unchanged
-  *    (10× the users/orders per day, same date range — how a bigger
-  *    business, not a longer history, scales).
-  *  - dimension tables (`customer`/`part`/`supplier`) — replicated
-  *    with the same key shifts their facts use; `nation`/`region`
-  *    stay as-is (25/5 rows; their keys are copied unshifted so
-  *    every replica joins the same dims).
+  * Replication contract: per-copy deterministic WORD SHUFFLE (each
+  * copy's words sort by xxhash64(word, copy)): the token MULTISET is
+  * invariant, so every multiset-derived metric (quality score,
+  * dup-word fraction, stopword ratios, token counts) scores each copy
+  * exactly like its original and curation filters pass rep× the mass;
+  * word ORDER differs per copy, so shingle sets decorrelate and
+  * near-dup candidate mass stays that of fresh data. (Salting copies
+  * with injected tokens instead blew dupWordFrac past the c01/c10
+  * cutoff and quietly shrank every downstream stage back to the
+  * original size.) The id shift (10⁸, a multiple of 40) preserves
+  * every doc_id-modulus plant density (eval splits at %10, edit
+  * plants at %20/%40).
   */
 object SfSynth {
 
-  /** Per-copy id-shift units — multiples of 40 (documents' modulus
+  /** Per-copy doc_id shift — a multiple of 40 (documents' modulus
     * plants) and far above any sf0.1 key range.
     */
-  private val IdShift = 100000000L    // documents / embeddings / dims
-  private val OrderShift = 1000000000L // orders / lineitem / events ids
+  private val IdShift = 100000000L
 
-  /** A documents fixture with a REALISTIC word-frequency law
-    * (round 19 — r18 verdict task 7 / missing 5): the shipped
-    * synthetic corpus draws from ~31 distinct words, so a BM25
-    * probe's postings degenerate to the whole corpus and the c03
-    * contamination audit's 100× residual measured that pathology,
-    * not the operator. Here each position samples a word rank from
-    * Zipf(s=1) over a `vocab`-word vocabulary by inverse CDF —
-    * rank = ⌊V^u⌋ with u uniform, so P(rank r) ∝ 1/r, the standard
-    * natural-language frequency law — fully declaratively
-    * (hash → uniform → pow), deterministic in (doc_id, position,
-    * seed). Schema matches the shipped table (doc_id, text, lang,
-    * source, n_chars).
-    */
-  def zipfDocuments(spark: SparkSession, nDocs: Long,
-      vocab: Int = 50000, seed: Long = 42L): DataFrame = {
-    require(nDocs > 0 && vocab > 1, "zipfDocuments: degenerate shape")
-    val lenExpr = (lit(50) +
-      pmod(xxhash64(col("doc_id"), lit(seed)), lit(150L))).cast("int")
-    def rankOf(p: org.apache.spark.sql.Column) = {
-      val u = pmod(xxhash64(col("doc_id"), p, lit(seed)), lit(1000003L))
-        .cast("double") / lit(1000003.0)
-      greatest(lit(1L), least(lit(vocab.toLong),
-        floor(pow(lit(vocab.toDouble), u)).cast("long")))
-    }
-    spark.range(nDocs)
-      .repartition(math.max(32, math.min(512, (nDocs / 10000L).toInt)))
-      .select(col("id").as("doc_id"))
-      .withColumn("text", array_join(
-        transform(sequence(lit(0), lenExpr - 1),
-          p => concat(lit("w"), rankOf(p).cast("string"))), " "))
-      .withColumn("lang", lit("en"))
-      .withColumn("source",
-        concat(lit("src"), pmod(col("doc_id"), lit(5L)).cast("string")))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-  }
-
-  /** The round-16 probe's replication of the documents table: copy i
-    * shifts doc_id by i·10⁸ and word-shuffles text deterministically
-    * (multiset-invariant; copy 0 shuffles too, so all copies are
-    * statistically alike).
+  /** Copy i shifts doc_id by i·10⁸ and word-shuffles text
+    * deterministically (multiset-invariant; copy 0 shuffles too, so
+    * all copies are statistically alike). Other columns pass through.
     */
   def replicateDocuments(docs: DataFrame, rep: Int): DataFrame =
     docs.repartition(64)
@@ -102,47 +48,4 @@ object SfSynth {
           s => s.getField("t")),
         " "))
       .drop("_i")
-
-  private def replicate(df: DataFrame, rep: Int,
-      shifts: Map[String, Long]): DataFrame = {
-    val shifted = shifts.foldLeft(
-      df.select(col("*"),
-        explode(sequence(lit(0), lit(rep - 1))).as("_i"))) {
-      case (d, (c, unit)) =>
-        d.withColumn(c, col(c) + col("_i").cast("long") * lit(unit))
-    }
-    shifted.drop("_i")
-  }
-
-  /** Materialize a synthetic `rep`× directory with every table, laid
-    * out like a driver sfDir so [[Tables.load]] reads it unchanged.
-    * `events.ts` is written as TIMESTAMP_NTZ — one of the two
-    * physical vintages [[Tables.events]] normalizes.
-    */
-  def synthesize(spark: SparkSession, sfDir: String, outDir: String,
-      rep: Int): Unit = {
-    def write(df: DataFrame, name: String): Unit =
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-
-    val raw = (n: String) => spark.read.parquet(s"$sfDir/$n.parquet")
-    write(replicateDocuments(raw("documents"), rep), "documents")
-    write(replicate(raw("embeddings"), rep,
-      Map("vec_id" -> IdShift)), "embeddings")
-    write(replicate(Tables.events(spark, sfDir), rep,
-      Map("event_id" -> OrderShift, "user_id" -> IdShift))
-      .withColumn("ts", col("ts").cast("timestamp_ntz")), "events")
-    write(replicate(raw("orders"), rep,
-      Map("o_orderkey" -> OrderShift, "o_custkey" -> IdShift)), "orders")
-    write(replicate(raw("lineitem"), rep,
-      Map("l_orderkey" -> OrderShift, "l_partkey" -> IdShift,
-        "l_suppkey" -> IdShift)), "lineitem")
-    write(replicate(raw("customer"), rep,
-      Map("c_custkey" -> IdShift)), "customer")
-    write(replicate(raw("part"), rep,
-      Map("p_partkey" -> IdShift)), "part")
-    write(replicate(raw("supplier"), rep,
-      Map("s_suppkey" -> IdShift)), "supplier")
-    write(raw("nation"), "nation")
-    write(raw("region"), "region")
-  }
 }

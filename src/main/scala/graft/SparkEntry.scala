@@ -22,10 +22,10 @@ object SparkEntry {
   }
 
   /** One JSON string escaper for every driver artifact (Verify's
-    * oracle_sql.json and Bench's metric lines): backslash, quote, and
-    * ALL control chars (<0x20) — a stray tab/CR in builder-authored
-    * SQL would otherwise make the driver's json.load fail and silently
-    * zero a round's results.
+    * oracle_sql.json): backslash, quote, and ALL control chars
+    * (<0x20) — a stray tab/CR in builder-authored SQL would otherwise
+    * make the driver's json.load fail and silently zero a round's
+    * results.
     */
   private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""

@@ -15,9 +15,8 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (same contract as SPARK_GRAFT_BENCH_ONLY):
-    // comma-separated query names; unknown names fail fast rather than
-    // silently verifying nothing.
+    // local-iteration filter: comma-separated query names; unknown
+    // names fail fast rather than silently verifying nothing.
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { o =>

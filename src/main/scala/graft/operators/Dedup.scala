@@ -197,7 +197,7 @@ object Dedup {
   }
 
   /** Default scope for BATCH operators; [[unpersistAll]] releases it.
-    * Per-query release (as Verify/Bench do) is safe for sequential
+    * Per-query release (as Verify does) is safe for sequential
     * batch work; concurrent batch callers should pass their own scope.
     */
   val batchScope = new CacheScope

@@ -153,7 +153,7 @@ object QualityModel {
     *    value) pairs into a bounded array (≤ dim entries), and
     *    generates the j ≤ k products with one flatten/transform —
     *    one doc-keyed exchange per round, footprint O(|docs|·nnz)
-    *    instead of O(|docs|·nnz²). QualityTrainScaleProbe measured
+    *    instead of O(|docs|·nnz²). A label-count scale probe measured
     *    this at wall-time PARITY with the cached path at 80k labels
     *    (the fan-out is cheap CPU against the same shuffle volume)
     *    with a 10× smaller persisted footprint — which is why it is

@@ -35,7 +35,7 @@ private[queries] object PipelineShared {
     * entries — fetched per scale-factor directory so the query composes
     * at any SF. Memoized: four ANN entries share the identical vector,
     * and without the cache each triggered its own TakeOrdered job over
-    * the embeddings table per Verify/Bench sweep.
+    * the embeddings table per Verify sweep.
     */
   val queryVecCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
@@ -186,7 +186,7 @@ private[queries] object PipelineShared {
     * 2654435761) mod 1000000007 — the PRE-REDUCTION keeps the product
     * under 2⁶³ for ANY doc_id; round 16: the unreduced form
     * overflowed ANSI longs past doc_id ≈ 3.47·10⁹, i.e. at real
-    * 100 TB id ranges, caught by PipelineSfScaleProbe's 100× run)
+    * 100 TB id ranges, caught by a 100× `SfSynth` corpus run)
     * with doc_id as the total-order tie-break, and only the first
     * `d17SampleCap` rows enter the eval. At sf0.01 (50 pool rows)
     * the cap is slack — the entry's behavior there is unchanged —
@@ -204,8 +204,8 @@ private[queries] object PipelineShared {
       "  ORDER BY ((doc_id % 2147483647) * 2654435761) % 1000000007, " +
       s"doc_id LIMIT $d17SampleCap"
 
-  /** c03 probe cap (round 16 — PipelineSfScaleProbe's one
-    * super-linear finding, triaged): the audit's retrieval leg
+  /** c03 probe cap (round 16 — the one super-linear finding of
+    * the 100× `SfSynth` corpus run, triaged): the audit's retrieval leg
     * scored every (probe, train doc) pair, and BOTH sides grow with
     * the corpus (probes are the doc_id%1000 bench sample) — on the
     * degenerate 31-word synthetic vocabulary every pair matches, so

@@ -131,4 +131,29 @@ class SourcesSpec extends SparkSpec {
       .select(graft.operators.Dedup.simhash64(col("t"))).as[Long].head()
     assert(r.getLong(3) == viaCol)
   }
+
+  test("SfSynth.replicateDocuments: rep× rows, shifted ids, same token multisets") {
+    val docs = Tables.load(spark, sfDir, "documents")
+      .select("doc_id", "text", "lang", "source", "n_chars")
+    val rep = 3
+    val shift = 100000000L
+    val orig = docs.collect().map(r => r.getLong(0) -> r).toMap
+    val copies = SfSynth.replicateDocuments(docs, rep)
+      .select("doc_id", "text", "lang", "source", "n_chars").collect()
+    assert(orig.nonEmpty && orig.keys.forall(id => id >= 0 && id < shift))
+    assert(copies.length == rep * orig.size)
+    val ids = copies.map(_.getLong(0))
+    assert(ids.distinct.length == ids.length, "doc_ids must stay distinct")
+    assert(ids.sorted.toSeq ==
+      (for (i <- 0 until rep; id <- orig.keys) yield id + i * shift).sorted)
+    def tokens(text: String) = text.split(" +").filter(_.nonEmpty).sorted.toSeq
+    copies.foreach { c =>
+      val o = orig(c.getLong(0) % shift)
+      assert(tokens(c.getString(1)) == tokens(o.getString(1)),
+        s"doc ${c.getLong(0)}: token multiset differs from doc ${o.getLong(0)}")
+      assert(c.getString(2) == o.getString(2))
+      assert(c.getString(3) == o.getString(3))
+      assert(c.getLong(4) == o.getLong(4))
+    }
+  }
 }
