@@ -111,6 +111,18 @@ import graft.operators.Dedup
   * while new readers see the new one (concurrent-reader safety across
   * swaps is spec-pinned in CorpusStoreSpec).
   *
+  * COW READ PLANNING AND COMMIT COUNTS START NO SPARK JOB: pointer,
+  * manifest, meta and schema records are read on the driver
+  * ([[TinyParquet]]); every data-tree read is handed its schema (the
+  * generation's row schema, the id column alone for tombstones and
+  * id scans, or an older epoch's footer schema) instead of inferring
+  * one with a job; and a commit counts the rows it wrote per bucket
+  * from the written files' parquet footers, not by reading them
+  * back. Building a snapshot or change-feed frame is therefore free
+  * of cluster work, and a commit's job count does not grow with the
+  * delta chain. (Spark itself still lists files with a job when one
+  * read passes more than 32 leaf directories.)
+  *
   * WRITERS ARE SINGLE-WRITER PER PATH (round 15 — ADVICE): two
   * concurrent writers both resolve CURRENT=g and both materialize
   * generation g+1, and the interleaved data writes can publish one
@@ -251,7 +263,7 @@ object CorpusStore {
       else (0, 0)
     df.write.mode("overwrite").parquet(s"$path/snapshots/gen=$gen")
     val dataStamp = stampWriterToken(spark, s"$path/snapshots/gen=$gen")
-    val n = spark.read.parquet(s"$path/snapshots/gen=$gen").count()
+    val n = TinyParquet.rowCount(spark, s"$path/snapshots/gen=$gen")
     Seq((gen, n)).toDF("gen", "n_rows")
       .repartition(1).write.mode("overwrite").parquet(s"$path/meta/gen=$gen")
     val metaStamp = stampWriterToken(spark, s"$path/meta/gen=$gen")
@@ -400,7 +412,8 @@ object CorpusStore {
 
   /** The store's row schema, resolved from the first NON-TOMBSTONE
     * tree the given manifest references (tombstone trees carry only
-    * the id column) — one parquet footer, metadata-scale.
+    * the id column) — one parquet footer read on the driver
+    * ([[TinyParquet.footerSchema]]), no Spark job.
     */
   private def storeRowSchema(spark: SparkSession, path: String,
       manifest: Map[Int, CowBucket])
@@ -412,7 +425,7 @@ object CorpusStore {
       }.headOption
       .getOrElse(throw new IllegalStateException(
         "CorpusStore: manifest references no data tree"))
-    spark.read.parquet(anchor).schema
+    TinyParquet.footerSchema(spark, anchor)
   }
 
   // ——— Schema evolution (round 17 — r16 missing item 1) ————————————
@@ -742,7 +755,7 @@ object CorpusStore {
     * documented read price of delta pressure; [[compactCorpusCow]]
     * retires it.
     *
-    * `target` is the schema of the GENERATION being read
+    * `target` is the schema of generation `gen`, the one being read
     * ([[storeRowSchemaAt]]): on a never-evolved store every tree
     * already matches it and the fast path is ONE multi-dir scan (the
     * pre-evolution plan, unchanged); on an evolved store trees group
@@ -751,21 +764,41 @@ object CorpusStore {
     * each pre-evolve group conforms (added columns filled by the
     * recorded default or null) before the union. Group count is
     * bounded by evolve count, not tree count.
+    *
+    * Every tree read is handed its schema, so building the view
+    * starts no Spark job (a schema-less `spark.read.parquet` infers
+    * with a one-task job per read): trees of `gen`'s own epoch read
+    * as `target`, tombstone trees as the id column alone, and each
+    * OLDER epoch as the footer of its first data tree — one
+    * driver-side footer read per older epoch per call.
     */
   private def readCowView(spark: SparkSession, path: String, idCol: String,
-      buckets: Map[Int, CowBucket],
+      buckets: Map[Int, CowBucket], gen: Int,
       target: org.apache.spark.sql.types.StructType)
       : DataFrame = {
     require(buckets.nonEmpty, "CorpusStore: no buckets to read")
     val schemaGens = schemaGensOnDisk(spark, path)
     def epochOf(srcGen: Int): Int =
       schemaGens.filter(_ <= srcGen).lastOption.getOrElse(-1)
+    val readEpoch = epochOf(gen)
+    val olderEpochSchemas = buckets.toSeq.sortBy(_._1)
+      .flatMap { case (b, st) =>
+        st.entries.filterNot(_.isTombstone).map(e => (epochOf(e.srcGen), b, e))
+      }
+      .filter(_._1 != readEpoch)
+      .groupBy(_._1).map { case (epoch, trees) =>
+        val (_, b, e) = trees.minBy(t => (t._2, t._3.srcGen))
+        epoch -> TinyParquet.footerSchema(spark, cowEntryDir(path, b, e))
+      }
+    def schemaOf(srcGen: Int) =
+      olderEpochSchemas.getOrElse(epochOf(srcGen), target)
+    val idOnly = org.apache.spark.sql.types.StructType(Seq(target(idCol)))
     val (plain, deltaful) =
       buckets.partition(!_._2.entries.exists(_.isDelta))
     val plainDf =
       if (plain.isEmpty) None
       else if (schemaGens.isEmpty)
-        Some(spark.read.parquet(plain.toSeq.sortBy(_._1).flatMap {
+        Some(spark.read.schema(target).parquet(plain.toSeq.sortBy(_._1).flatMap {
           case (b, st) => st.entries.map(e => cowEntryDir(path, b, e))
         }: _*))
       else {
@@ -776,8 +809,9 @@ object CorpusStore {
           .groupBy(_._1).toSeq.sortBy(_._1)
         Some(byEpoch.map { case (_, trees) =>
           conformTo(
-            spark.read.parquet(trees.sortBy(t => (t._2, t._3.srcGen))
-              .map(t => cowEntryDir(path, t._2, t._3)): _*),
+            spark.read.schema(schemaOf(trees.head._3.srcGen))
+              .parquet(trees.sortBy(t => (t._2, t._3.srcGen))
+                .map(t => cowEntryDir(path, t._2, t._3)): _*),
             target)
         }.reduce(_ unionByName _))
       }
@@ -793,7 +827,8 @@ object CorpusStore {
           .sortBy { case ((d, g, t), _) => (d, g, t) }
         val unioned = groups.map { case ((isDelta, srcGen, isTomb), dirs) =>
           val lww = lit(if (isDelta) srcGen.toLong else 0L)
-          val df = spark.read.parquet(dirs.map(_._4).sorted: _*)
+          val df = spark.read.schema(if (isTomb) idOnly else schemaOf(srcGen))
+            .parquet(dirs.map(_._4).sorted: _*)
           if (!isTomb)
             conformTo(df, target).select(
               target.fieldNames.map(col) :+
@@ -826,10 +861,15 @@ object CorpusStore {
     * present-and-live filter both need: with tombstones in a chain,
     * "id appears in some tree" no longer implies "id is live" — a
     * resurrecting upsert must raise the live count and a re-delete of
-    * a dead id must not lower it.
+    * a dead id must not lower it. Every tree reads under the id-only
+    * schema `idField` (the id column never changes name or type
+    * within one manifest), so building the scan starts no Spark job.
     */
-  private def cowIdState(spark: SparkSession, path: String, idCol: String,
+  private def cowIdState(spark: SparkSession, path: String,
+      idField: org.apache.spark.sql.types.StructField,
       buckets: Map[Int, CowBucket]): DataFrame = {
+    val idCol = idField.name
+    val idOnly = org.apache.spark.sql.types.StructType(Seq(idField))
     val groups = buckets.toSeq
       .flatMap { case (b, st) =>
         st.entries.map(e => (e.isDelta, e.srcGen, e.isTombstone,
@@ -838,7 +878,7 @@ object CorpusStore {
       .groupBy { case (d, g, t, _) => (d, g, t) }.toSeq
       .sortBy { case ((d, g, t), _) => (d, g, t) }
     val unioned = groups.map { case ((isDelta, srcGen, isTomb), dirs) =>
-      spark.read.parquet(dirs.map(_._4).sorted: _*)
+      spark.read.schema(idOnly).parquet(dirs.map(_._4).sorted: _*)
         .select(col(idCol),
           lit(if (isDelta) srcGen.toLong else 0L).as("_cs_lww"),
           lit(isTomb).as("_cs_dead"))
@@ -914,13 +954,12 @@ object CorpusStore {
     * null-fill or drop columns. TYPES are part of the contract too
     * (round-16 review): same-named columns with drifted types would
     * pass a name-set check, commit, and only fail — or worse, coerce —
-    * at read time. The stored schema resolves from one existing
-    * non-tombstone tree's parquet footer — metadata-only.
+    * at read time. `stored` is the generation's row schema
+    * ([[storeRowSchemaAt]] — the recorded schema, else one data tree's
+    * footer read on the driver), resolved once by the caller.
     */
-  private def requireStoreSchema(spark: SparkSession, path: String,
-      df: DataFrame, gen: Int, manifest: Map[Int, CowBucket],
-      op: String): Unit = {
-    val stored = storeRowSchemaAt(spark, path, gen, manifest)
+  private def requireStoreSchema(df: DataFrame,
+      stored: org.apache.spark.sql.types.StructType, op: String): Unit = {
     val storedCols = stored.fields.map(f => f.name -> f.dataType).toMap
     val frameCols = df.schema.fields.map(f => f.name -> f.dataType).toMap
     require(frameCols.keySet == storedCols.keySet,
@@ -982,11 +1021,9 @@ object CorpusStore {
     writeCowTree(df, idCol, numBuckets, s"$path/parts/gen=$gen",
       bloom = true)
     val dataStamp = stampWriterToken(spark, s"$path/parts/gen=$gen")
-    // the written tree (with partition inference) names the buckets
-    // this generation owns and the version's row count in one scan
-    val counts = spark.read.parquet(s"$path/parts/gen=$gen")
-      .groupBy("_cs_bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // the written tree's footers name the buckets this generation owns
+    // and the version's row count — no read-back job
+    val counts = TinyParquet.bucketRowCounts(spark, s"$path/parts/gen=$gen")
     require(counts.nonEmpty, "writeCorpusCow: refusing an empty corpus")
     // on an EVOLVED store a full rewrite resets the schema epoch: it
     // owns every tree, so whatever shape it materialized IS the
@@ -1012,18 +1049,17 @@ object CorpusStore {
     * proportional to the touched buckets, never the corpus.
     */
   private def cowModify(spark: SparkSession, path: String,
+      idCol: String, numBuckets: Int, g: Int,
+      manifest: Map[Int, CowBucket],
+      schema: org.apache.spark.sql.types.StructType,
       changeBuckets: Array[Int],
       merge: Option[DataFrame] => DataFrame): Int = {
-    val idCol = cowIdCol(spark, path)
-    val numBuckets = effectiveNumBuckets(spark, path)
-    val (g, base) = currentGen(spark, path)
+    val base = currentGen(spark, path)._2
     val gen = g + 1
-    val manifest = readCowManifest(spark, path, g)
     val oldBuckets = manifest.filter(kv => changeBuckets.contains(kv._1))
     val old =
       if (oldBuckets.nonEmpty)
-        Some(readCowView(spark, path, idCol, oldBuckets,
-          storeRowSchemaAt(spark, path, g, manifest)))
+        Some(readCowView(spark, path, idCol, oldBuckets, g, schema))
       else None
     val merged = merge(old)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1092,9 +1128,8 @@ object CorpusStore {
     * id — round-15 review finding), and the store's row schema
     * (round-16 ADVICE — see [[requireStoreSchema]]).
     */
-  private def requireChangeFrame(spark: SparkSession, path: String,
-      changes: DataFrame, idCol: String, gen: Int,
-      manifest: Map[Int, CowBucket], op: String): Unit = {
+  private def requireChangeFrame(changes: DataFrame, idCol: String,
+      stored: org.apache.spark.sql.types.StructType, op: String): Unit = {
     require(changes.columns.contains(idCol),
       s"$op: frame has no column '$idCol'")
     val dup = changes.groupBy(col(idCol)).agg(count(lit(1)).as("_cs_n"))
@@ -1103,7 +1138,7 @@ object CorpusStore {
       s"$op: duplicated id ${dup.headOption.map(_.get(0)).orNull} in " +
         "the change set — a keyed store has no deterministic survivor " +
         "for two rows under one id; dedupe the batch first")
-    requireStoreSchema(spark, path, changes, gen, manifest, op)
+    requireStoreSchema(changes, stored, op)
   }
 
   /** Upsert into a COW store: rows of `df` REPLACE same-id rows and
@@ -1137,11 +1172,11 @@ object CorpusStore {
       s"CorpusStore: $path is not a copy-on-write store")
     val g = currentGen(spark, path)._1
     val manifest = readCowManifest(spark, path, g)
-    requireChangeFrame(spark, path, changes, idCol, g, manifest,
-      "upsertIntoCorpusCow")
+    val schema = storeRowSchemaAt(spark, path, g, manifest)
+    requireChangeFrame(changes, idCol, schema, "upsertIntoCorpusCow")
     val touched = touchedBuckets(changes, idCol, numBuckets)
     require(touched.nonEmpty, "upsertIntoCorpusCow: empty change set")
-    cowModify(spark, path, touched, {
+    cowModify(spark, path, idCol, numBuckets, g, manifest, schema, touched, {
       case Some(old) => old
         .join(changes.select(col(idCol)), Seq(idCol), "left_anti")
         .unionByName(changes)
@@ -1171,7 +1206,10 @@ object CorpusStore {
     val delN = del.count()
     require(delN > 0, "deleteFromCorpusCow: empty takedown set")
     val touched = touchedBuckets(del, idCol, numBuckets)
-    cowModify(spark, path, touched, {
+    val g = currentGen(spark, path)._1
+    val manifest = readCowManifest(spark, path, g)
+    cowModify(spark, path, idCol, numBuckets, g, manifest,
+      storeRowSchemaAt(spark, path, g, manifest), touched, {
       case Some(old) =>
         old.join(boundedBroadcastHint(del, delN), Seq(idCol), "left_anti")
       case None =>
@@ -1192,9 +1230,11 @@ object CorpusStore {
     * spec-pinned), at the price of an id-keyed merge exchange;
     * [[compactCorpusCow]] folds deltas back into base trees when
     * [[cowHealthReport]] says the chains have grown. Exact live
-    * counts stay metadata-scale: the only read this commit does is a
-    * COLUMN-PRUNED id scan of the touched buckets (to count
-    * replacements), a small fraction of a document tree. Same
+    * counts stay cheap: the batch's per-bucket counts come from the
+    * written delta trees' parquet footers (driver-side, no job), and
+    * the only data read this commit does is a COLUMN-PRUNED id scan
+    * of the touched buckets (to count replacements), a small fraction
+    * of a document tree. Same
     * fail-fast contract as upsert (id column, id-unique, store
     * schema). Returns the committed generation.
     */
@@ -1209,10 +1249,10 @@ object CorpusStore {
     * and re-counted it, so every streamed batch paid two extra
     * materialization jobs; a micro-batch commit is stage-latency
     * bound, so redundant jobs are the whole cost). The batch row
-    * count now derives from the per-bucket read-back counts (their
-    * sum IS the batch count — the write is the batch's own rows)
-    * instead of a separate count() job. Returns (generation, batch
-    * row count).
+    * count derives from the per-bucket footer counts of the written
+    * delta trees (their sum IS the batch count — the write is the
+    * batch's own rows) instead of a separate count() job or a
+    * read-back scan. Returns (generation, batch row count).
     */
   private def appendDeltaPinned(changes: DataFrame, path: String,
       knownNonEmpty: Boolean): (Int, Long) = {
@@ -1226,12 +1266,12 @@ object CorpusStore {
     val (g, base) = currentGen(spark, path)
     val gen = g + 1
     val manifest = readCowManifest(spark, path, g)
-    requireChangeFrame(spark, path, changes, idCol, g, manifest,
-      "appendDeltaToCorpusCow")
+    val schema = storeRowSchemaAt(spark, path, g, manifest)
+    requireChangeFrame(changes, idCol, schema, "appendDeltaToCorpusCow")
     // empty frames fail HERE with the contract's message — after the
     // write they would surface as an unreadable zero-file tree. A
     // limit-1 probe of the pinned frame, not a full count: the exact
-    // count comes for free from the read-back below.
+    // count comes for free from the written trees' footers below.
     require(knownNonEmpty || !changes.isEmpty,
       "appendDeltaToCorpusCow: empty change set")
     // the delta write IS the whole data write: the batch's own rows,
@@ -1239,9 +1279,7 @@ object CorpusStore {
     writeCowTree(changes, idCol, numBuckets,
       s"$path/deltas/gen=$gen", bloom = false)
     val dataStamp = stampWriterToken(spark, s"$path/deltas/gen=$gen")
-    val counts = spark.read.parquet(s"$path/deltas/gen=$gen")
-      .groupBy("_cs_bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val counts = TinyParquet.bucketRowCounts(spark, s"$path/deltas/gen=$gen")
     require(counts.nonEmpty, "appendDeltaToCorpusCow: empty change set")
     // the batch's exact count — sizes the replacement probe's join
     // strategy and feeds the caller's ingest-log row
@@ -1255,7 +1293,7 @@ object CorpusStore {
     val priorBuckets = manifest.filter(kv => counts.contains(kv._1))
     val replaced: Map[Int, Long] =
       if (priorBuckets.isEmpty) Map.empty
-      else cowIdState(spark, path, idCol, priorBuckets)
+      else cowIdState(spark, path, schema(idCol), priorBuckets)
         .where(!col("_cs_dead"))
         .join(boundedBroadcastHint(changes.select(col(idCol)), batchN),
           Seq(idCol))
@@ -1309,9 +1347,8 @@ object CorpusStore {
     val (g, base) = currentGen(spark, path)
     val gen = g + 1
     val manifest = readCowManifest(spark, path, g)
-    val idType =
-      storeRowSchemaAt(spark, path, g, manifest)(idCol).dataType
-    val del = ids.select(col(idCol).cast(idType).as(idCol)).distinct()
+    val idField = storeRowSchemaAt(spark, path, g, manifest)(idCol)
+    val del = ids.select(col(idCol).cast(idField.dataType).as(idCol)).distinct()
       .localCheckpoint()
     val delN = del.count()
     require(delN > 0,
@@ -1321,7 +1358,7 @@ object CorpusStore {
     val touched = touchedBuckets(del, idCol, numBuckets)
     val priorBuckets = manifest.filter(kv => touched.contains(kv._1))
     if (priorBuckets.isEmpty) return g
-    val doomed = cowIdState(spark, path, idCol, priorBuckets)
+    val doomed = cowIdState(spark, path, idField, priorBuckets)
       .where(!col("_cs_dead"))
       .join(boundedBroadcastHint(del, delN), Seq(idCol))
       .select(col(idCol))
@@ -1330,9 +1367,7 @@ object CorpusStore {
     writeCowTree(doomed, idCol, numBuckets,
       s"$path/deltas/gen=$gen", bloom = false)
     val dataStamp = stampWriterToken(spark, s"$path/deltas/gen=$gen")
-    val counts = spark.read.parquet(s"$path/deltas/gen=$gen")
-      .groupBy("_cs_bucket").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val counts = TinyParquet.bucketRowCounts(spark, s"$path/deltas/gen=$gen")
     val newManifest = manifest ++ counts.map { case (b, n) =>
       val prior = manifest(b) // doomed ids are live ⇒ bucket exists
       b -> CowBucket(prior.live - n,
@@ -1377,19 +1412,18 @@ object CorpusStore {
       if (expectLive.isEmpty) Nil
       else {
         writeCowTree(
-          readCowView(spark, path, idCol, expectLive,
+          readCowView(spark, path, idCol, expectLive, g,
             storeRowSchemaAt(spark, path, g, manifest)),
           idCol, numBuckets, s"$path/parts/gen=$gen", bloom = true)
         Seq(stampWriterToken(spark, s"$path/parts/gen=$gen"))
       }
     val counts =
       if (expectLive.isEmpty) Map.empty[Int, Long]
-      else spark.read.parquet(s"$path/parts/gen=$gen")
-        .groupBy("_cs_bucket").agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // self-check: the folded trees must hold exactly the manifest's
-    // live counts — a mismatch means the LWW merge or the counts'
-    // bookkeeping broke, and committing it would corrupt the store
+      else TinyParquet.bucketRowCounts(spark, s"$path/parts/gen=$gen")
+    // self-check: the folded trees' footer row counts must equal the
+    // manifest's live counts — a mismatch means the LWW merge or the
+    // counts' bookkeeping broke, and committing it would corrupt the
+    // store
     require(counts.keySet == expectLive.keySet &&
         expectLive.forall { case (b, st) => counts(b) == st.live },
       s"compactCorpusCow: folded counts $counts diverge from manifest " +
@@ -1482,7 +1516,7 @@ object CorpusStore {
     // eager checkpoint: the upsert reads store paths it then mutates;
     // the streaming source's batch must also be pinned before reuse.
     // The pinned write variants skip the public methods' second
-    // checkpoint, and the delta path's read-back counts supply the
+    // checkpoint, and the delta path's footer counts supply the
     // log's n_admitted — a streamed batch pays one materialization
     // and no standalone count jobs (round 19).
     val b = batch.localCheckpoint()
@@ -1670,7 +1704,7 @@ object CorpusStore {
       }
       if (changed.isEmpty)
         readCorpusSnapshotAt(spark, path, toGen).limit(0)
-      else readCowView(spark, path, cowIdCol(spark, path), changed,
+      else readCowView(spark, path, cowIdCol(spark, path), changed, toGen,
         storeRowSchemaAt(spark, path, toGen, manifest))
     }
   }
@@ -1795,21 +1829,30 @@ object CorpusStore {
       val manifest = readCowManifest(spark, path, gen)
       require(manifest.nonEmpty,
         s"CorpusStore: generation $gen at $path holds no rows")
-      readCowView(spark, path, cowIdCol(spark, path), manifest,
+      readCowView(spark, path, cowIdCol(spark, path), manifest, gen,
         storeRowSchemaAt(spark, path, gen, manifest))
     } else spark.read.parquet(s"$path/snapshots/gen=$gen")
   }
 
   /** (gen, n_rows) per retained version, from the 1-row manifests —
-    * never scans snapshot data. Projected to the two columns every
+    * never scans snapshot data. The meta rows are read on the driver
+    * ([[TinyParquet.readGroups]]) and returned as a local frame
+    * ordered by gen, so listing starts no Spark job however many
+    * generations are retained. Projected to the two columns every
     * meta version carries, so mixed meta vintages list cleanly.
     */
   def listCorpusSnapshots(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
     val (g, b) = currentGen(spark, path)
-    spark.read
-      .parquet((b to g).map(i => s"$path/meta/gen=$i"): _*)
-      .select("gen", "n_rows")
-      .orderBy("gen")
+    val rows = (b to g).flatMap(i =>
+      TinyParquet.readGroups(spark, s"$path/meta/gen=$i")
+        .map(r => (r.getInteger("gen", 0), r.getLong("n_rows", 0))))
+      .sortBy(_._1)
+      .map { case (gen, n) => org.apache.spark.sql.Row(gen, n) }
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("gen", IntegerType),
+        StructField("n_rows", LongType))))
   }
 
   /** Between-version review: [[graft.operators.Dedup.snapshotDiff]]

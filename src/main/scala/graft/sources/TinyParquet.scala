@@ -22,6 +22,16 @@ import org.apache.spark.sql.SparkSession
   * Spark-written file of these shapes (dictionary pages, optional
   * fields, v1/v2 column sets) because the example reader resolves
   * the footer schema per file.
+  *
+  * FOOTER helpers answer the two questions a COW store used to ask of
+  * its own data trees through Spark jobs: a tree's Spark schema
+  * ([[footerSchema]] — what `spark.read.parquet(dir).schema` infers,
+  * which launches a one-task schema-merge job per read) and a
+  * generation's per-bucket row counts ([[bucketRowCounts]] — what a
+  * write-back `groupBy("_cs_bucket").count()` scanned). Both read only
+  * parquet footers on the driver, over the files Spark's file index
+  * would list (names starting with `_` or `.` skipped), so a store's
+  * read planning and commit bookkeeping start no Spark job.
   */
 private[graft] object TinyParquet {
 
@@ -121,6 +131,91 @@ private[graft] object TinyParquet {
       .sortBy(_.getPath.getName)
     files.flatMap(st => readGroupsFile(spark, st.getPath)).toSeq
   }
+
+  /** The files a Spark read of `dir` would treat as data, name-sorted:
+    * everything but subdirectories and the names Spark's file index
+    * hides (`_`- or `.`-prefixed — `_SUCCESS`, `_WRITER`, `.crc`
+    * siblings — and `._COPYING_` leftovers).
+    */
+  private def dataFiles(spark: SparkSession, dir: String)
+      : Seq[org.apache.hadoop.fs.Path] =
+    fs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+      .filter(_.isFile).map(_.getPath)
+      .filterNot { p =>
+        val n = p.getName
+        n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
+      }
+      .sortBy(_.getName).toSeq
+
+  private def footer(spark: SparkSession, file: org.apache.hadoop.fs.Path)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sessionState.newHadoopConf()))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The Spark schema `spark.read.parquet(dir).schema` infers for a
+    * flat tree (data files directly under `dir`), from ONE footer and
+    * no Spark job: the row schema the Spark writer recorded under
+    * its row-metadata key, else the parquet schema converted under
+    * the session's conf — then made nullable at every depth, as a
+    * file source's relation does.
+    */
+  def footerSchema(spark: SparkSession, dir: String)
+      : org.apache.spark.sql.types.StructType = {
+    val file = dataFiles(spark, dir).headOption.getOrElse(
+      throw new java.io.FileNotFoundException(s"no parquet data file in $dir"))
+    val meta = footer(spark, file).getFileMetaData
+    val recorded = Option(meta.getKeyValueMetaData.get(
+      org.apache.spark.sql.execution.datasources.parquet
+        .ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(
+        org.apache.spark.sql.types.DataType.fromJson(json)).toOption)
+      .collect { case st: org.apache.spark.sql.types.StructType => st }
+    val schema = recorded.getOrElse(
+      new org.apache.spark.sql.execution.datasources.parquet
+        .ParquetToSparkSchemaConverter(spark.sessionState.conf)
+        .convert(meta.getSchema))
+    asNullable(schema).asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+
+  private def asNullable(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = asNullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(asNullable(a.elementType), true)
+      case m: MapType =>
+        MapType(asNullable(m.keyType), asNullable(m.valueType), true)
+      case other => other
+    }
+  }
+
+  /** Total rows of a flat tree — the sum of its data files' footer
+    * row-group counts; `spark.read.parquet(dir).count()` without the
+    * job.
+    */
+  def rowCount(spark: SparkSession, dir: String): Long = {
+    import scala.jdk.CollectionConverters._
+    dataFiles(spark, dir)
+      .map(footer(spark, _).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /** Rows per `_cs_bucket=<b>` subdirectory of a bucket-partitioned
+    * generation — `spark.read.parquet(genDir).groupBy("_cs_bucket")
+    * .count()` from footers: buckets whose files hold no row are
+    * absent, as they are from the aggregate.
+    */
+  def bucketRowCounts(spark: SparkSession, genDir: String): Map[Int, Long] =
+    fs(spark, genDir).listStatus(new org.apache.hadoop.fs.Path(genDir))
+      .filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case n if n.startsWith("_cs_bucket=") =>
+        n.stripPrefix("_cs_bucket=").toInt ->
+          rowCount(spark, s"$genDir/$n")
+      }
+      .filter(_._2 > 0).toMap
 
   /** Every row of ONE parquet file, as example Groups. */
   def readGroupsFile(spark: SparkSession,
