@@ -67,7 +67,7 @@ import graft.operators.Dedup
   * ones; the base is always oldest). The read-side price is the
   * id-keyed shuffle that merge needs — [[compactCorpusCow]] folds
   * every delta-carrying bucket back into a single base tree as a new
-  * generation, restoring the plain multi-dir scan, and
+  * generation, restoring the merge-free scan, and
   * [[cowHealthReport]] surfaces the delta pressure that says when.
   *
   * Why TOMBSTONES (round 16): the delta leg fixed INGEST
@@ -118,10 +118,11 @@ import graft.operators.Dedup
   * id scans, or an older epoch's footer schema) instead of inferring
   * one with a job; and a commit counts the rows it wrote per bucket
   * from the written files' parquet footers, not by reading them
-  * back. Building a snapshot or change-feed frame is therefore free
-  * of cluster work, and a commit's job count does not grow with the
-  * delta chain. (Spark itself still lists files with a job when one
-  * read passes more than 32 leaf directories.)
+  * back. Reads list their files on the driver too: a read is a
+  * [[CowFileIndex]] relation over exactly the trees the manifest
+  * names, however many leaf directories that is. Building a snapshot
+  * or change-feed frame is therefore free of cluster work, and a
+  * commit's job count does not grow with the delta chain.
   *
   * WRITERS ARE SINGLE-WRITER PER PATH (round 15 — ADVICE): two
   * concurrent writers both resolve CURRENT=g and both materialize
@@ -740,37 +741,48 @@ object CorpusStore {
       wroteSchema = true)
   }
 
-  /** The materialized view of the given buckets. Base-only buckets
-    * union in ONE multi-dir parquet scan (the fast path — the only
-    * plan a delta-free store ever sees, unchanged from round 15);
-    * delta-carrying buckets merge base ∪ deltas ∪ tombstones
-    * LAST-WRITER-WINS per id: trees group by (kind, src_gen) so each
-    * generation's delta files read in one scan, a literal `_cs_lww`
-    * orders them (base pinned at 0 — always the bucket's oldest
-    * entry), a `_cs_dead` flag marks tombstone rows (id-only trees,
-    * remaining columns null-filled in the store's row types), and a
-    * row_number window per id keeps the newest row — dead winners are
-    * then filtered out, which is exactly how a tombstone deletes and
-    * a later upsert resurrects. The window's id-keyed exchange is the
-    * documented read price of delta pressure; [[compactCorpusCow]]
-    * retires it.
+  /** One tree of a read as [[CowFileIndex]] sees it: its directory,
+    * its last-writer-wins rank (`src_gen` for a delta, 0 for a base —
+    * always the bucket's oldest entry) and whether it is a tombstone.
+    */
+  private def cowTree(path: String, bucket: Int,
+      e: CowEntry): CowFileIndex.Tree =
+    CowFileIndex.Tree(cowEntryDir(path, bucket, e),
+      if (e.isDelta) e.srcGen.toLong else 0L, e.isTombstone)
+
+  /** Keep the newest row per id (highest `_cs_lww`); the survivors
+    * still carry `_cs_dead`.
+    */
+  private def lastWriterWins(df: DataFrame, idCol: String): DataFrame =
+    df.withColumn("_cs_rn", row_number().over(
+        Window.partitionBy(col(idCol)).orderBy(col("_cs_lww").desc)))
+      .where(col("_cs_rn") === 1)
+      .drop("_cs_rn")
+
+  /** The materialized view of the given buckets, read as ONE
+    * [[CowFileIndex]] relation per schema epoch over the manifest's
+    * trees: no file listing job, no per-tree-group scans, and no
+    * per-call literal in the plan. Every row carries its tree's
+    * partition values, `_cs_lww` and `_cs_dead`. Base-only buckets
+    * need no merge and are projected to the row columns. Delta-carrying
+    * buckets resolve LAST-WRITER-WINS per id: a row_number window
+    * ranked on `_cs_lww` keeps the newest row, and dead winners are
+    * filtered out, which is exactly how a tombstone deletes and a
+    * later upsert resurrects. Tombstone trees hold only the id column
+    * and read under the row schema, so their other columns come back
+    * null. The window's id-keyed exchange is the documented read price
+    * of delta pressure; [[compactCorpusCow]] retires it.
     *
     * `target` is the schema of generation `gen`, the one being read
-    * ([[storeRowSchemaAt]]): on a never-evolved store every tree
-    * already matches it and the fast path is ONE multi-dir scan (the
-    * pre-evolution plan, unchanged); on an evolved store trees group
-    * by schema EPOCH — the newest evolve at-or-below their src_gen,
-    * resolved from the schemas listing, never per-tree footers — and
-    * each pre-evolve group conforms (added columns filled by the
-    * recorded default or null) before the union. Group count is
-    * bounded by evolve count, not tree count.
-    *
-    * Every tree read is handed its schema, so building the view
-    * starts no Spark job (a schema-less `spark.read.parquet` infers
-    * with a one-task job per read): trees of `gen`'s own epoch read
-    * as `target`, tombstone trees as the id column alone, and each
-    * OLDER epoch as the footer of its first data tree — one
-    * driver-side footer read per older epoch per call.
+    * ([[storeRowSchemaAt]]). Trees group by schema EPOCH — the newest
+    * evolve at-or-below their src_gen, resolved from the schemas
+    * listing, never per-tree footers. `gen`'s own epoch reads as
+    * `target`; each OLDER epoch reads as the footer of its first data
+    * tree (one driver-side footer read per older epoch per call) and
+    * conforms to `target` ([[conformTo]]: added columns filled by the
+    * recorded default or null, renamed ones mapped by provenance)
+    * before the union. A never-evolved store reads one relation for
+    * the base-only buckets and one for the delta-carrying buckets.
     */
   private def readCowView(spark: SparkSession, path: String, idCol: String,
       buckets: Map[Int, CowBucket], gen: Int,
@@ -790,104 +802,51 @@ object CorpusStore {
         val (_, b, e) = trees.minBy(t => (t._2, t._3.srcGen))
         epoch -> TinyParquet.footerSchema(spark, cowEntryDir(path, b, e))
       }
-    def schemaOf(srcGen: Int) =
-      olderEpochSchemas.getOrElse(epochOf(srcGen), target)
-    val idOnly = org.apache.spark.sql.types.StructType(Seq(target(idCol)))
+    val withRank = org.apache.spark.sql.types.StructType(
+      target.fields ++ CowFileIndex.partitionSchema.fields)
+    def relations(bs: Map[Int, CowBucket]): DataFrame =
+      bs.toSeq.sortBy(_._1)
+        .flatMap { case (b, st) => st.entries.map(e => (b, e)) }
+        .groupBy { case (_, e) => epochOf(e.srcGen) }.toSeq.sortBy(_._1)
+        .map { case (epoch, trees) =>
+          conformTo(CowFileIndex.read(spark,
+              olderEpochSchemas.getOrElse(epoch, target),
+              trees.map { case (b, e) => cowTree(path, b, e) }),
+            withRank)
+        }.reduce(_ unionByName _)
     val (plain, deltaful) =
       buckets.partition(!_._2.entries.exists(_.isDelta))
-    val plainDf =
-      if (plain.isEmpty) None
-      else if (schemaGens.isEmpty)
-        Some(spark.read.schema(target).parquet(plain.toSeq.sortBy(_._1).flatMap {
-          case (b, st) => st.entries.map(e => cowEntryDir(path, b, e))
-        }: _*))
-      else {
-        val byEpoch = plain.toSeq
-          .flatMap { case (b, st) =>
-            st.entries.map(e => (epochOf(e.srcGen), b, e))
-          }
-          .groupBy(_._1).toSeq.sortBy(_._1)
-        Some(byEpoch.map { case (_, trees) =>
-          conformTo(
-            spark.read.schema(schemaOf(trees.head._3.srcGen))
-              .parquet(trees.sortBy(t => (t._2, t._3.srcGen))
-                .map(t => cowEntryDir(path, t._2, t._3)): _*),
-            target)
-        }.reduce(_ unionByName _))
-      }
-    val mergedDf =
-      if (deltaful.isEmpty) None
-      else {
-        val groups = deltaful.toSeq
-          .flatMap { case (b, st) =>
-            st.entries.map(e => (e.isDelta, e.srcGen, e.isTombstone,
-              cowEntryDir(path, b, e)))
-          }
-          .groupBy { case (d, g, t, _) => (d, g, t) }.toSeq
-          .sortBy { case ((d, g, t), _) => (d, g, t) }
-        val unioned = groups.map { case ((isDelta, srcGen, isTomb), dirs) =>
-          val lww = lit(if (isDelta) srcGen.toLong else 0L)
-          val df = spark.read.schema(if (isTomb) idOnly else schemaOf(srcGen))
-            .parquet(dirs.map(_._4).sorted: _*)
-          if (!isTomb)
-            conformTo(df, target).select(
-              target.fieldNames.map(col) :+
-                lww.as("_cs_lww") :+ lit(false).as("_cs_dead"): _*)
-          else
-            df.select(target.fields.map { f =>
-              if (f.name == idCol) col(idCol).cast(f.dataType).as(f.name)
-              else lit(null).cast(f.dataType).as(f.name)
-            } :+ lww.as("_cs_lww") :+ lit(true).as("_cs_dead"): _*)
-        }.reduce(_ unionByName _)
-        val w = Window.partitionBy(col(idCol)).orderBy(col("_cs_lww").desc)
-        Some(unioned
-          .withColumn("_cs_rn", row_number().over(w))
-          .where(col("_cs_rn") === 1 && !col("_cs_dead"))
-          .drop("_cs_lww", "_cs_rn", "_cs_dead"))
-      }
-    (plainDf, mergedDf) match {
-      case (Some(p), Some(m)) => p.unionByName(m.select(p.columns.map(col): _*))
-      case (Some(p), None)    => p
-      case (None, Some(m))    => m
-      case (None, None)       => throw new IllegalStateException("unreachable")
-    }
+    val views =
+      (if (plain.isEmpty) Nil else Seq(relations(plain))) ++
+        (if (deltaful.isEmpty) Nil
+         else Seq(lastWriterWins(relations(deltaful), idCol)
+           .where(!col("_cs_dead"))))
+    views.map(_.select(target.fieldNames.map(col): _*))
+      .reduce(_ unionByName _)
   }
 
   /** The CURRENT liveness state of every id in the given buckets —
     * (id, `_cs_dead`), one row per id after last-writer-wins — from a
-    * COLUMN-PRUNED scan (the id column of data trees, the whole of
-    * tombstone trees). What [[appendDeltaToCorpusCow]]'s live-count
-    * bookkeeping and [[appendTombstonesToCorpusCow]]'s
+    * COLUMN-PRUNED scan: one [[CowFileIndex]] relation over every
+    * tree, read under the id-only schema `idField` (the id column
+    * never changes name or type within one manifest), ranked on its
+    * `_cs_lww` partition column. What [[appendDeltaToCorpusCow]]'s
+    * live-count bookkeeping and [[appendTombstonesToCorpusCow]]'s
     * present-and-live filter both need: with tombstones in a chain,
     * "id appears in some tree" no longer implies "id is live" — a
     * resurrecting upsert must raise the live count and a re-delete of
-    * a dead id must not lower it. Every tree reads under the id-only
-    * schema `idField` (the id column never changes name or type
-    * within one manifest), so building the scan starts no Spark job.
+    * a dead id must not lower it. Building the scan starts no Spark
+    * job.
     */
   private def cowIdState(spark: SparkSession, path: String,
       idField: org.apache.spark.sql.types.StructField,
       buckets: Map[Int, CowBucket]): DataFrame = {
-    val idCol = idField.name
-    val idOnly = org.apache.spark.sql.types.StructType(Seq(idField))
-    val groups = buckets.toSeq
-      .flatMap { case (b, st) =>
-        st.entries.map(e => (e.isDelta, e.srcGen, e.isTombstone,
-          cowEntryDir(path, b, e)))
-      }
-      .groupBy { case (d, g, t, _) => (d, g, t) }.toSeq
-      .sortBy { case ((d, g, t), _) => (d, g, t) }
-    val unioned = groups.map { case ((isDelta, srcGen, isTomb), dirs) =>
-      spark.read.schema(idOnly).parquet(dirs.map(_._4).sorted: _*)
-        .select(col(idCol),
-          lit(if (isDelta) srcGen.toLong else 0L).as("_cs_lww"),
-          lit(isTomb).as("_cs_dead"))
-    }.reduce(_ unionByName _)
-    val w = Window.partitionBy(col(idCol)).orderBy(col("_cs_lww").desc)
-    unioned
-      .withColumn("_cs_rn", row_number().over(w))
-      .where(col("_cs_rn") === 1)
-      .select(col(idCol), col("_cs_dead"))
+    val trees = buckets.toSeq.sortBy(_._1)
+      .flatMap { case (b, st) => st.entries.map(e => cowTree(path, b, e)) }
+    lastWriterWins(CowFileIndex.read(spark,
+        org.apache.spark.sql.types.StructType(Seq(idField)), trees),
+      idField.name)
+      .select(col(idField.name), col("_cs_dead"))
   }
 
   /** Shared COW commit tail: manifest + meta + writer-token

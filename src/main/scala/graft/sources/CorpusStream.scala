@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.StructType
   * stream downtime (the same reader contract every vacuum carries).
   *
   * V1 [[Source]] on purpose: `getBatch` returns the change feed's
-  * DataFrame directly (manifest-resolved multi-dir parquet scans, the
+  * DataFrame directly (manifest-fed parquet relations, the
   * LWW merge only where chains exist), so the stream reads the exact
   * plan the batch feed reads — a DSv2 MicroBatchStream would have to
   * re-implement the scan row-by-row for zero gain on a

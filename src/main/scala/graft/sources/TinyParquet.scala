@@ -32,6 +32,12 @@ import org.apache.spark.sql.SparkSession
   * parquet footers on the driver, over the files Spark's file index
   * would list (names starting with `_` or `.` skipped), so a store's
   * read planning and commit bookkeeping start no Spark job.
+  *
+  * The LISTING helper [[dataFileStatuses]] is that same data-file
+  * filter over one non-recursive listing of a leaf directory. It feeds
+  * [[CowFileIndex]], so a store read plans from the directories its
+  * manifest names instead of Spark's file index, which lists more
+  * than 32 paths with a parallel Spark job.
   */
 private[graft] object TinyParquet {
 
@@ -133,19 +139,20 @@ private[graft] object TinyParquet {
   }
 
   /** The files a Spark read of `dir` would treat as data, name-sorted:
-    * everything but subdirectories and the names Spark's file index
-    * hides (`_`- or `.`-prefixed — `_SUCCESS`, `_WRITER`, `.crc`
-    * siblings — and `._COPYING_` leftovers).
+    * one non-recursive listing, keeping everything but subdirectories
+    * and the names Spark's file index hides (`_`- or `.`-prefixed —
+    * `_SUCCESS`, `_WRITER`, `.crc` siblings — and `._COPYING_`
+    * leftovers).
     */
-  private def dataFiles(spark: SparkSession, dir: String)
-      : Seq[org.apache.hadoop.fs.Path] =
+  def dataFileStatuses(spark: SparkSession, dir: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
     fs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(_.isFile).map(_.getPath)
-      .filterNot { p =>
-        val n = p.getName
+      .filter(_.isFile)
+      .filterNot { st =>
+        val n = st.getPath.getName
         n.startsWith("_") || n.startsWith(".") || n.endsWith("._COPYING_")
       }
-      .sortBy(_.getName).toSeq
+      .sortBy(_.getPath.getName).toSeq
 
   private def footer(spark: SparkSession, file: org.apache.hadoop.fs.Path)
       : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
@@ -164,8 +171,9 @@ private[graft] object TinyParquet {
     */
   def footerSchema(spark: SparkSession, dir: String)
       : org.apache.spark.sql.types.StructType = {
-    val file = dataFiles(spark, dir).headOption.getOrElse(
-      throw new java.io.FileNotFoundException(s"no parquet data file in $dir"))
+    val file = dataFileStatuses(spark, dir).headOption.map(_.getPath)
+      .getOrElse(throw new java.io.FileNotFoundException(
+        s"no parquet data file in $dir"))
     val meta = footer(spark, file).getFileMetaData
     val recorded = Option(meta.getKeyValueMetaData.get(
       org.apache.spark.sql.execution.datasources.parquet
@@ -180,7 +188,8 @@ private[graft] object TinyParquet {
     asNullable(schema).asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
-  private def asNullable(dt: org.apache.spark.sql.types.DataType)
+  /** `dt` with every field, array element and map value nullable. */
+  def asNullable(dt: org.apache.spark.sql.types.DataType)
       : org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
     dt match {
@@ -199,8 +208,9 @@ private[graft] object TinyParquet {
     */
   def rowCount(spark: SparkSession, dir: String): Long = {
     import scala.jdk.CollectionConverters._
-    dataFiles(spark, dir)
-      .map(footer(spark, _).getBlocks.asScala.map(_.getRowCount).sum).sum
+    dataFileStatuses(spark, dir)
+      .map(st => footer(spark, st.getPath).getBlocks.asScala
+        .map(_.getRowCount).sum).sum
   }
 
   /** Rows per `_cs_bucket=<b>` subdirectory of a bucket-partitioned

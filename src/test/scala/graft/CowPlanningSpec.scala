@@ -14,6 +14,10 @@ import graft.sources.{CorpusStore, TinyParquet}
   *  - a delta commit's job count does not grow with the chain it
   *    appends to (no per-tree-group schema inference, no write-back
   *    count);
+  *  - that holds past Spark's 32-path parallel-listing threshold: a
+  *    64-bucket read lists its trees on the driver through
+  *    [[graft.sources.CowFileIndex]], whose partition filters select
+  *    exactly the matching trees;
   *  - the footer helpers agree with Spark: the footer schema equals
   *    what `spark.read.parquet` infers (nested non-nullable columns
   *    included, with and without Spark's row metadata), and footer
@@ -28,35 +32,24 @@ class CowPlanningSpec extends SparkSpec {
 
   private val nBuckets = 8
 
-  private def jobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    // drain events of earlier work before counting
-    org.apache.spark.graft.ListenerBusAccess.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try body finally {
-      org.apache.spark.graft.ListenerBusAccess
-        .waitUntilEmpty(spark.sparkContext)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    n.get()
-  }
-
   /** Up to `k` ids of `ids` per bucket (the smallest), so a batch of
     * them touches every bucket.
     */
-  private def perBucket(ids: Seq[Long], k: Int): Seq[Long] = {
-    val byBucket = ids.toDF("doc_id")
+  private def perBucket(ids: Seq[Long], k: Int,
+      buckets: Int = nBuckets): Seq[Long] =
+    byBucket(ids, buckets).values.flatMap(_.take(k)).toSeq.sorted
+
+  /** `ids` by their bucket, each bucket's ids ascending; every bucket
+    * must be covered.
+    */
+  private def byBucket(ids: Seq[Long], buckets: Int): Map[Int, Seq[Long]] = {
+    val by = ids.toDF("doc_id")
       .select(col("doc_id"),
-        pmod(xxhash64(col("doc_id")), lit(nBuckets.toLong)).cast("int"))
+        pmod(xxhash64(col("doc_id")), lit(buckets.toLong)).cast("int"))
       .as[(Long, Int)].collect().toSeq.groupBy(_._2)
-    assert(byBucket.size == nBuckets, "ids do not cover every bucket")
-    byBucket.values.flatMap(_.map(_._1).sorted.take(k)).toSeq.sorted
+      .map { case (b, rows) => b -> rows.map(_._1).sorted }
+    assert(by.size == buckets, "ids do not cover every bucket")
+    by
   }
 
   private def docs(ids: Seq[Long], tag: String) =
@@ -78,7 +71,7 @@ class CowPlanningSpec extends SparkSpec {
     def chain = CorpusStore.cowHealthReport(spark, path).maxDeltaChain
     appendBatch()
     assert(chain == 1)
-    val onChain1 = jobs(appendBatch())
+    val onChain1 = JobBudget.jobs(spark)(appendBatch())
     // alternate tombstones and deltas: six more generations, every
     // one touching every bucket
     for (_ <- 0 until 3) {
@@ -91,7 +84,7 @@ class CowPlanningSpec extends SparkSpec {
     val (g, _) = CorpusStore.currentGen(spark, path)
     var snap: org.apache.spark.sql.DataFrame = null
     var changes: org.apache.spark.sql.DataFrame = null
-    val planning = jobs {
+    val planning = JobBudget.jobs(spark) {
       snap = CorpusStore.readCorpusSnapshot(spark, path)
       changes = CorpusStore.corpusChangesSince(spark, path, 1, g)
       CorpusStore.listCorpusSnapshots(spark, path).collect()
@@ -100,12 +93,84 @@ class CowPlanningSpec extends SparkSpec {
       s"building snapshot/change frames and listing paid $planning job(s)")
     assert(snap.select("doc_id").as[Long].collect().toSet == live)
     assert(changes.count() > 0)
-    val onChain8 = jobs(appendBatch())
+    val onChain8 = JobBudget.jobs(spark)(appendBatch())
     assert(onChain8 <= onChain1,
       s"one delta append paid $onChain1 job(s) onto a chain of 1 and " +
         s"$onChain8 onto a chain of 8")
     assert(CorpusStore.readCorpusSnapshot(spark, path)
       .select("doc_id").as[Long].collect().toSet == live)
+  }
+
+  test("a 64-bucket read past Spark's 32-path listing threshold plans with ZERO jobs") {
+    val path = tmp("graft-cow-jobs64")
+    val wide = 64
+    val founding = perBucket(1L to 4000L, 3, wide)
+    CorpusStore.writeCorpusCow(docs(founding, "base"), path, "doc_id", wide)
+    // one delta over 40 of the 64 buckets: an updated id in each of
+    // buckets 0-9 and a new id in each of buckets 0-39
+    val old = byBucket(founding, wide)
+    val fresh = byBucket((1 to 8000).map(j => 100000L + j), wide)
+    val delta = ((0 until 10).map(old(_).head) ++
+      (0 until 40).map(fresh(_).head)).sorted
+    CorpusStore.appendDeltaToCorpusCow(docs(delta, "d1"), path)
+    var snap: org.apache.spark.sql.DataFrame = null
+    var changes: org.apache.spark.sql.DataFrame = null
+    val planning = JobBudget.jobs(spark) {
+      snap = CorpusStore.readCorpusSnapshot(spark, path)
+      changes = CorpusStore.corpusChangesSince(spark, path, 0, 1)
+      snap.queryExecution.executedPlan
+      changes.queryExecution.executedPlan
+    }
+    assert(planning == 0,
+      s"building 64-bucket snapshot/change frames paid $planning job(s)")
+    val rows = snap.as[(Long, String)].collect().toMap
+    assert(rows.keySet == (founding ++ delta).toSet)
+    assert(delta.forall(i => rows(i) == s"d1 document $i"))
+    assert(changes.as[(Long, String)].collect().toMap ==
+      delta.map(i => i -> s"d1 document $i").toMap)
+  }
+
+  test("CowFileIndex.listFiles applies partition filters exactly: each filter returns exactly the matching trees, no filter returns all") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.types.{BooleanType, LongType, StructType}
+    import graft.sources.CowFileIndex
+    val root = tmp("graft-cow-index")
+    val shape = Seq((0L, false), (3L, false), (5L, true), (7L, false))
+    val trees = shape.zipWithIndex.map { case ((lww, dead), i) =>
+      val dir = s"$root/t$i"
+      spark.range(i * 10L, i * 10L + 3, 1, 2).toDF("doc_id")
+        .write.parquet(dir)
+      CowFileIndex.Tree(dir, lww, dead)
+    }
+    val index = new CowFileIndex(spark, trees)
+    val lww = AttributeReference("_cs_lww", LongType, nullable = false)()
+    val dead = AttributeReference("_cs_dead", BooleanType, nullable = false)()
+    def listed(filters: Expression*): Seq[(Long, Boolean)] =
+      index.listFiles(filters, Nil).map { p =>
+        assert(p.files.nonEmpty && p.files.forall(_.getPath.getName
+          .endsWith(".parquet")))
+        (p.values.getLong(0), p.values.getBoolean(1))
+      }
+    assert(listed() == shape)
+    assert(listed(EqualTo(dead, Literal(true))) == Seq((5L, true)))
+    assert(listed(Not(dead)) == shape.filterNot(_._2))
+    assert(listed(GreaterThan(lww, Literal(3L))) ==
+      Seq((5L, true), (7L, false)))
+    assert(listed(GreaterThan(lww, Literal(0L)), Not(dead)) ==
+      Seq((3L, false), (7L, false)))
+    assert(listed(EqualTo(lww, Literal(4L))).isEmpty)
+    assert(index.inputFiles.length == trees.map(t =>
+      TinyParquet.dataFileStatuses(spark, t.dir).size).sum)
+    // through a query: the file-source strategy hands the partition
+    // filters to listFiles and does not re-apply them after the scan
+    val df = CowFileIndex.read(spark,
+      StructType(Seq(org.apache.spark.sql.types.StructField("doc_id",
+        LongType))), trees)
+    assert(df.where(col("_cs_dead")).select("doc_id").as[Long]
+      .collect().toSet == Set(20L, 21L, 22L))
+    assert(df.where(col("_cs_lww") >= 5L && !col("_cs_dead"))
+      .select("doc_id").as[Long].collect().toSet == Set(30L, 31L, 32L))
+    assert(df.count() == 12)
   }
 
   test("footer schema equals spark.read.parquet's inferred schema: nested non-nullable columns, with and without Spark row metadata") {

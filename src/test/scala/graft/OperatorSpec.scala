@@ -1490,28 +1490,11 @@ class SimilaritySpec extends SparkSpec {
       .select($"vec_id".as("query_id"), $"embedding")
       .as[(Long, Array[Float])].collect().toSeq
     val queries = qRows.toDF("query_id", "embedding")
-    def jobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try body finally {
-        // job-start events post asynchronously; drain the bus
-        org.apache.spark.graft.ListenerBusAccess
-          .waitUntilEmpty(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(l)
-      }
-      n.get()
-    }
     // auto mode (shuffleRerank = None): the size guard must read the
     // literal frame's length from the optimized plan — building the
     // (lazy) result DataFrame fires no Spark job at all
     var result: org.apache.spark.sql.DataFrame = null
-    val planningJobs = jobs {
+    val planningJobs = JobBudget.jobs(spark) {
       result = Similarity.knnPqBatch(queries, "query_id", "embedding",
         emb, "vec_id", "embedding", k = 10, cb = cb, overfetch = 4,
         shuffleRerank = None)
@@ -2709,27 +2692,10 @@ class TextAnalysisSpec extends SparkSpec {
     def train(b: Int) =
       TextAnalysis.bpeTrain(df, "text", numMerges = 12, batchSize = b)
         .as[(Int, String, String, Long)].collect().toList
-    def jobs(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try body finally {
-        // job-start events post asynchronously; drain the bus
-        org.apache.spark.graft.ListenerBusAccess
-          .waitUntilEmpty(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(l)
-      }
-      n.get()
-    }
     var seqTable: List[(Int, String, String, Long)] = Nil
     var batTable: List[(Int, String, String, Long)] = Nil
-    val jSeq = jobs { seqTable = train(1) }
-    val jBat = jobs { batTable = train(6) }
+    val jSeq = JobBudget.jobs(spark) { seqTable = train(1) }
+    val jBat = JobBudget.jobs(spark) { batTable = train(6) }
     assert(seqTable.length == 12 && seqTable == batTable,
       s"batched table diverged:\nseq=$seqTable\nbat=$batTable")
     // the scalable-BPE point: merges/batch driver round-trips, so the
@@ -2797,33 +2763,16 @@ class TextAnalysisSpec extends SparkSpec {
     }
     val doc = (Seq.fill(50)("abcdef") ++ fillers).mkString(" ")
     val df = Seq(doc).toDF("text")
-    def shuffleRecords(body: => Unit): Long = {
-      val n = new java.util.concurrent.atomic.AtomicLong
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          n.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try body finally {
-        org.apache.spark.graft.ListenerBusAccess
-          .waitUntilEmpty(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(l)
-      }
-      n.get()
-    }
     var t1: List[(Int, String, String, Long)] = Nil
     var t5: List[(Int, String, String, Long)] = Nil
-    val s1 = shuffleRecords {
+    val s1 = JobBudget.measure(spark) {
       t1 = TextAnalysis.bpeTrain(df, "text", numMerges = 1)
         .as[(Int, String, String, Long)].collect().toList
-    }
-    val s5 = shuffleRecords {
+    }.shuffleRecordsWritten
+    val s5 = JobBudget.measure(spark) {
       t5 = TextAnalysis.bpeTrain(df, "text", numMerges = 5)
         .as[(Int, String, String, Long)].collect().toList
-    }
+    }.shuffleRecordsWritten
     assert(t1.length == 1 && t5.length == 5 && t5.head == t1.head,
       s"unexpected merge tables: $t1 / $t5")
     // a per-round re-count would shuffle the ~5.8k filler pairs every
