@@ -1054,13 +1054,16 @@ object CorpusStore {
     } finally merged.unpersist(false)
   }
 
-  /** The buckets a change frame's ids hash into — bounded collect
-    * (≤ num_buckets distinct values).
+  /** Rows per bucket of a change or takedown frame — the buckets its
+    * ids hash into and how many rows each got, duplicates included.
+    * One aggregate with a bounded collect (≤ num_buckets rows): its
+    * key set names the touched buckets, its sum bounds the id set for
+    * [[boundedBroadcastHint]], and an empty map is an empty set.
     */
-  private def touchedBuckets(df: DataFrame, idCol: String,
-                             numBuckets: Int): Array[Int] =
-    df.select(bucketExpr(idCol, numBuckets).as("_cs_bucket"))
-      .distinct().collect().map(_.getInt(0))
+  private def rowsPerBucket(df: DataFrame, idCol: String,
+      numBuckets: Int): Map[Int, Long] =
+    df.groupBy(bucketExpr(idCol, numBuckets).as("_cs_bucket")).count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
 
   /** Driver-memory guard on the change paths' id-probe joins
     * (round 17 — r16 review finding 2): within the documented
@@ -1133,7 +1136,7 @@ object CorpusStore {
     val manifest = readCowManifest(spark, path, g)
     val schema = storeRowSchemaAt(spark, path, g, manifest)
     requireChangeFrame(changes, idCol, schema, "upsertIntoCorpusCow")
-    val touched = touchedBuckets(changes, idCol, numBuckets)
+    val touched = rowsPerBucket(changes, idCol, numBuckets).keys.toArray
     require(touched.nonEmpty, "upsertIntoCorpusCow: empty change set")
     cowModify(spark, path, idCol, numBuckets, g, manifest, schema, touched, {
       case Some(old) => old
@@ -1161,10 +1164,12 @@ object CorpusStore {
     require(ids.columns.contains(idCol),
       s"deleteFromCorpusCow: frame has no column '$idCol'")
     val numBuckets = effectiveNumBuckets(spark, path)
-    val del = ids.select(col(idCol)).distinct().localCheckpoint()
-    val delN = del.count()
-    require(delN > 0, "deleteFromCorpusCow: empty takedown set")
-    val touched = touchedBuckets(del, idCol, numBuckets)
+    // pinned once; duplicate ids are harmless to the left_anti merge
+    val del = ids.select(col(idCol)).localCheckpoint()
+    val perBucket = rowsPerBucket(del, idCol, numBuckets)
+    require(perBucket.nonEmpty, "deleteFromCorpusCow: empty takedown set")
+    val delN = perBucket.values.sum
+    val touched = perBucket.keys.toArray
     val g = currentGen(spark, path)._1
     val manifest = readCowManifest(spark, path, g)
     cowModify(spark, path, idCol, numBuckets, g, manifest,
@@ -1196,10 +1201,16 @@ object CorpusStore {
     * of a document tree. Same
     * fail-fast contract as upsert (id column, id-unique, store
     * schema). Returns the committed generation.
+    *
+    * Job shape: pin the batch (one job), the duplicate-id check, the
+    * delta write (range sampling, exchange, write) and the
+    * replacement count over the touched buckets' ids. Emptiness is
+    * read from the written tree's footers, not probed beforehand: an
+    * empty batch's tree is deleted and the call fails with "empty
+    * change set", leaving no directory behind.
     */
   def appendDeltaToCorpusCow(df: DataFrame, path: String): Int =
-    appendDeltaPinned(df.localCheckpoint(), path,
-      knownNonEmpty = false)._1
+    appendDeltaPinned(df.localCheckpoint(), path)._1
 
   /** [[appendDeltaToCorpusCow]] over a frame the CALLER already
     * pinned with localCheckpoint — the ingest loop's path (round 19
@@ -1213,8 +1224,8 @@ object CorpusStore {
     * batch's own rows) instead of a separate count() job or a
     * read-back scan. Returns (generation, batch row count).
     */
-  private def appendDeltaPinned(changes: DataFrame, path: String,
-      knownNonEmpty: Boolean): (Int, Long) = {
+  private def appendDeltaPinned(changes: DataFrame,
+      path: String): (Int, Long) = {
     val spark = changes.sparkSession
     require(isCow(spark, path),
       s"CorpusStore: $path is not a copy-on-write store")
@@ -1227,19 +1238,18 @@ object CorpusStore {
     val manifest = readCowManifest(spark, path, g)
     val schema = storeRowSchemaAt(spark, path, g, manifest)
     requireChangeFrame(changes, idCol, schema, "appendDeltaToCorpusCow")
-    // empty frames fail HERE with the contract's message — after the
-    // write they would surface as an unreadable zero-file tree. A
-    // limit-1 probe of the pinned frame, not a full count: the exact
-    // count comes for free from the written trees' footers below.
-    require(knownNonEmpty || !changes.isEmpty,
-      "appendDeltaToCorpusCow: empty change set")
     // the delta write IS the whole data write: the batch's own rows,
     // partitioned by bucket, under the generation's private deltas dir
-    writeCowTree(changes, idCol, numBuckets,
-      s"$path/deltas/gen=$gen", bloom = false)
-    val dataStamp = stampWriterToken(spark, s"$path/deltas/gen=$gen")
-    val counts = TinyParquet.bucketRowCounts(spark, s"$path/deltas/gen=$gen")
+    val dest = s"$path/deltas/gen=$gen"
+    writeCowTree(changes, idCol, numBuckets, dest, bloom = false)
+    // an empty frame writes a tree with no rows: its footers are the
+    // emptiness check (no probe job before the write), and the tree
+    // goes before the contract's failure so nothing is left behind
+    val counts = TinyParquet.bucketRowCounts(spark, dest)
+    if (counts.isEmpty) fs(spark, dest).delete(
+      new org.apache.hadoop.fs.Path(dest), true)
     require(counts.nonEmpty, "appendDeltaToCorpusCow: empty change set")
+    val dataStamp = stampWriterToken(spark, dest)
     // the batch's exact count — sizes the replacement probe's join
     // strategy and feeds the caller's ingest-log row
     val batchN = counts.values.sum
@@ -1294,6 +1304,16 @@ object CorpusStore {
     * unchanged. Refuses to tombstone the last live rows (the
     * empty-store refusal every delete path shares). Returns the
     * committed generation.
+    *
+    * Job shape, eight jobs for a small set whatever the chain length:
+    * the cast ids are pinned once (one job, no `distinct`); one
+    * per-bucket count aggregate names the touched buckets, bounds the
+    * set for the broadcast and rejects an empty set; and the doomed
+    * ids — a `left_semi` join of the touched buckets' live ids
+    * against the set, so repeated ids write one marker each — go
+    * straight into the tombstone write. When nothing in the set is
+    * live that write holds no row: its footers say so, the
+    * `deltas/gen=<g+1>` tree is deleted and CURRENT is returned.
     */
   def appendTombstonesToCorpusCow(ids: DataFrame, path: String): Int = {
     val spark = ids.sparkSession
@@ -1307,26 +1327,32 @@ object CorpusStore {
     val gen = g + 1
     val manifest = readCowManifest(spark, path, g)
     val idField = storeRowSchemaAt(spark, path, g, manifest)(idCol)
-    val del = ids.select(col(idCol).cast(idField.dataType).as(idCol)).distinct()
+    val del = ids.select(col(idCol).cast(idField.dataType).as(idCol))
       .localCheckpoint()
-    val delN = del.count()
-    require(delN > 0,
+    val perBucket = rowsPerBucket(del, idCol, numBuckets)
+    require(perBucket.nonEmpty,
       "appendTombstonesToCorpusCow: empty takedown set")
     // restrict to ids present AND live — the trees to consult are the
     // touched buckets that physically exist in the manifest
-    val touched = touchedBuckets(del, idCol, numBuckets)
-    val priorBuckets = manifest.filter(kv => touched.contains(kv._1))
+    val priorBuckets = manifest.filter(kv => perBucket.contains(kv._1))
     if (priorBuckets.isEmpty) return g
+    // a semi join keeps each live id once however often the set
+    // repeats it; the id-state side is one row per id
     val doomed = cowIdState(spark, path, idField, priorBuckets)
       .where(!col("_cs_dead"))
-      .join(boundedBroadcastHint(del, delN), Seq(idCol))
+      .join(boundedBroadcastHint(del, perBucket.values.sum), Seq(idCol),
+        "left_semi")
       .select(col(idCol))
-      .localCheckpoint()
-    if (doomed.limit(1).count() == 0) return g
-    writeCowTree(doomed, idCol, numBuckets,
-      s"$path/deltas/gen=$gen", bloom = false)
-    val dataStamp = stampWriterToken(spark, s"$path/deltas/gen=$gen")
-    val counts = TinyParquet.bucketRowCounts(spark, s"$path/deltas/gen=$gen")
+    val dest = s"$path/deltas/gen=$gen"
+    writeCowTree(doomed, idCol, numBuckets, dest, bloom = false)
+    // nothing live in the set: the written tree holds no row — drop it
+    // and commit nothing
+    val counts = TinyParquet.bucketRowCounts(spark, dest)
+    if (counts.isEmpty) {
+      fs(spark, dest).delete(new org.apache.hadoop.fs.Path(dest), true)
+      return g
+    }
+    val dataStamp = stampWriterToken(spark, dest)
     val newManifest = manifest ++ counts.map { case (b, n) =>
       val prior = manifest(b) // doomed ids are live ⇒ bucket exists
       b -> CowBucket(prior.live - n,
@@ -1481,7 +1507,7 @@ object CorpusStore {
     val b = batch.localCheckpoint()
     if (b.isEmpty) return
     val (gen, n) =
-      if (asDeltas) appendDeltaPinned(b, path, knownNonEmpty = true)
+      if (asDeltas) appendDeltaPinned(b, path)
       else {
         val idCol = cowIdCol(spark, path)
         val numBuckets = effectiveNumBuckets(spark, path)
@@ -2123,7 +2149,10 @@ object CorpusStore {
       compactIngestLog(spark, s"$path/ingest_log")
       actions += "log_compacted"
     }
-    CowMaintainResult(before, actions.result(),
-      cowHealthReport(spark, path, maxGenerations, compactAfterDeltas))
+    val done = actions.result()
+    // no action changed the store: its health is the one just read
+    CowMaintainResult(before, done,
+      if (done.isEmpty) before
+      else cowHealthReport(spark, path, maxGenerations, compactAfterDeltas))
   }
 }

@@ -18,11 +18,18 @@ import graft.sources.{CorpusStore, TinyParquet}
   *    64-bucket read lists its trees on the driver through
   *    [[graft.sources.CowFileIndex]], whose partition filters select
   *    exactly the matching trees;
+  *  - a small tombstone commit starts at most eight jobs however long
+  *    its chain; a set with nothing live in it commits nothing and
+  *    leaves no tree; repeated ids write one marker each; an empty
+  *    delta fails and leaves no tree;
   *  - the footer helpers agree with Spark: the footer schema equals
   *    what `spark.read.parquet` infers (nested non-nullable columns
   *    included, with and without Spark's row metadata), and footer
   *    bucket counts equal a `groupBy("_cs_bucket").count()` over a
-  *    multi-file generation with stray hidden files.
+  *    multi-file generation with stray hidden files;
+  *  - the driver-side row reader returns what parquet-java's example
+  *    `ParquetReader` returns, on every metadata shape and on
+  *    dictionary-encoded and multi-row-group files.
   */
 class CowPlanningSpec extends SparkSpec {
   import spark.implicits._
@@ -99,6 +106,102 @@ class CowPlanningSpec extends SparkSpec {
         s"$onChain8 onto a chain of 8")
     assert(CorpusStore.readCorpusSnapshot(spark, path)
       .select("doc_id").as[Long].collect().toSet == live)
+  }
+
+  test("a 10-id tombstone starts at most 8 jobs, and no more on a delta chain of 8 than on a chain of 1") {
+    val path = tmp("graft-cow-tomb-jobs")
+    val founding = perBucket(1L to 400L, 6)
+    CorpusStore.writeCorpusCow(docs(founding, "base"), path, "doc_id",
+      nBuckets)
+    var live = founding.toSet
+    var batch = 0
+    def appendBatch(): Unit = {
+      batch += 1
+      val ids = perBucket((1 to 200).map(j => 100000L * batch + j), 1)
+      live ++= ids
+      CorpusStore.appendDeltaToCorpusCow(docs(ids, s"d$batch"), path)
+    }
+    def tombstone10(): Int = {
+      val doomed = perBucket(live.toSeq, 2).take(10)
+      assert(doomed.size == 10)
+      live --= doomed
+      JobBudget.jobs(spark)(CorpusStore.appendTombstonesToCorpusCow(
+        doomed.toDF("doc_id"), path))
+    }
+    def chain = CorpusStore.cowHealthReport(spark, path).maxDeltaChain
+    appendBatch()
+    assert(chain == 1)
+    val onChain1 = tombstone10()
+    while (chain < 8) appendBatch()
+    val onChain8 = tombstone10()
+    assert(onChain1 <= 8, s"a 10-id tombstone paid $onChain1 jobs")
+    assert(onChain8 <= onChain1,
+      s"a 10-id tombstone paid $onChain1 job(s) onto a chain of 1 and " +
+        s"$onChain8 onto a chain of 8")
+    assert(CorpusStore.readCorpusSnapshot(spark, path)
+      .select("doc_id").as[Long].collect().toSet == live)
+  }
+
+  test("a tombstone set with nothing live in it returns CURRENT and leaves no deltas/gen=<g+1> tree") {
+    val path = tmp("graft-cow-tomb-noop")
+    val founding = perBucket(1L to 400L, 4)
+    CorpusStore.writeCorpusCow(docs(founding, "base"), path, "doc_id",
+      nBuckets)
+    val dead = founding.take(3)
+    val g = CorpusStore.appendTombstonesToCorpusCow(dead.toDF("doc_id"),
+      path)
+    // absent ids hash into every (existing) bucket, so the live-id
+    // probe and its write run
+    val absent = perBucket((1 to 400).map(j => 900000L + j), 1)
+    for (set <- Seq(absent, dead, dead ++ absent)) {
+      assert(CorpusStore.appendTombstonesToCorpusCow(set.toDF("doc_id"),
+        path) == g)
+      assert(CorpusStore.currentGen(spark, path)._1 == g)
+      assert(!new java.io.File(s"$path/deltas/gen=${g + 1}").exists,
+        s"a no-op tombstone of $set left deltas/gen=${g + 1} behind")
+    }
+    assert(CorpusStore.readCorpusSnapshot(spark, path)
+      .select("doc_id").as[Long].collect().toSet == founding.toSet -- dead)
+  }
+
+  test("a tombstone set with repeated ids writes one marker per live id") {
+    val path = tmp("graft-cow-tomb-dups")
+    val founding = perBucket(1L to 400L, 4)
+    CorpusStore.writeCorpusCow(docs(founding, "base"), path, "doc_id",
+      nBuckets)
+    val dead = founding.take(2)
+    CorpusStore.appendTombstonesToCorpusCow(dead.toDF("doc_id"), path)
+    val doomed = founding.slice(2, 7)
+    val set = doomed.flatMap(i => Seq.fill(3)(i)) ++ dead ++ dead ++
+      Seq(900001L, 900001L)
+    val g = CorpusStore.appendTombstonesToCorpusCow(set.toDF("doc_id"),
+      path)
+    val markers = TinyParquet.readGroups(spark, s"$path/manifest/gen=$g")
+      .filter(r => r.getInteger("src_gen", 0) == g &&
+        r.getBoolean("is_tombstone", 0))
+      .map(_.getLong("n_rows", 0)).sum
+    assert(markers == doomed.size)
+    assert(TinyParquet.bucketRowCounts(spark, s"$path/deltas/gen=$g")
+      .values.sum == doomed.size)
+    assert(CorpusStore.cowHealthReport(spark, path).totalRows ==
+      founding.size - dead.size - doomed.size)
+    assert(CorpusStore.readCorpusSnapshot(spark, path)
+      .select("doc_id").as[Long].collect().toSet ==
+      founding.toSet -- dead -- doomed)
+  }
+
+  test("an empty appendDeltaToCorpusCow fails with 'empty change set' and leaves no tree behind") {
+    val path = tmp("graft-cow-empty-delta")
+    val founding = perBucket(1L to 400L, 4)
+    CorpusStore.writeCorpusCow(docs(founding, "base"), path, "doc_id",
+      nBuckets)
+    val (g, _) = CorpusStore.currentGen(spark, path)
+    val err = intercept[IllegalArgumentException](
+      CorpusStore.appendDeltaToCorpusCow(docs(Nil, "none"), path))
+    assert(err.getMessage.contains(
+      "appendDeltaToCorpusCow: empty change set"))
+    assert(!new java.io.File(s"$path/deltas/gen=${g + 1}").exists)
+    assert(CorpusStore.currentGen(spark, path)._1 == g)
   }
 
   test("a 64-bucket read past Spark's 32-path listing threshold plans with ZERO jobs") {
@@ -224,5 +327,84 @@ class CowPlanningSpec extends SparkSpec {
     assert(TinyParquet.bucketRowCounts(spark, genDir) == viaSpark)
     assert(TinyParquet.rowCount(spark, bucketDir.getPath) ==
       spark.read.parquet(bucketDir.getPath).count())
+  }
+
+  test("readGroups and readGroupsFile return the example ParquetReader's rows: v1, v2 and current manifests, appended nulls, dictionary pages, several row groups") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val root = tmp("graft-tiny-read")
+    val conf = spark.sessionState.newHadoopConf()
+    def parquetFiles(dir: String): Seq[Path] =
+      new java.io.File(dir).listFiles().map(_.getName)
+        .filter(_.endsWith(".parquet")).sorted.map(n => new Path(s"$dir/$n"))
+        .toSeq
+    def footer(f: Path) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getFooter finally r.close()
+    }
+    def example(f: Path): Seq[String] = {
+      val r = ParquetReader.builder(new GroupReadSupport(), f)
+        .withConf(conf).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null)
+        .map(_.toString).toVector
+      finally r.close()
+    }
+    // v1 and v2 manifests, as the Spark writer of their day left them
+    Seq((0, 1, 5L), (3, 0, 7L)).toDF("bucket", "src_gen", "n_rows")
+      .repartition(1).write.parquet(s"$root/v1")
+    Seq((0, 1, true, 5L, 9L), (3, 0, false, 7L, 7L))
+      .toDF("bucket", "src_gen", "is_delta", "n_rows", "live_rows")
+      .repartition(1).write.parquet(s"$root/v2")
+    TinyParquet.write(spark, s"$root/current",
+      """message spark_schema {
+        |  required int32 bucket;
+        |  required int32 src_gen;
+        |  required boolean is_delta;
+        |  required boolean is_tombstone;
+        |  required int64 n_rows;
+        |  required int64 live_rows;
+        |}""".stripMargin,
+      Seq(Seq(0, 1, true, true, 2L, 3L), Seq(0, 0, false, false, 5L, 3L),
+        Seq(4, 0, false, false, 6L, 6L)))
+    val logSchema =
+      """message spark_schema {
+        |  required int64 batch;
+        |  optional int64 rows;
+        |  optional boolean done;
+        |}""".stripMargin
+    TinyParquet.appendRows(spark, s"$root/log", logSchema,
+      Seq(Seq(1L, 10L, true), Seq(2L, null, null)))
+    TinyParquet.appendRows(spark, s"$root/log", logSchema,
+      Seq(Seq(3L, null, false)))
+    spark.range(0, 600, 1, 1)
+      .select(col("id"), concat(lit("tag-"), (col("id") % 4).cast("string"))
+        .as("tag"))
+      .write.parquet(s"$root/dict")
+    spark.range(0, 20000, 1, 1)
+      .select(col("id"), (col("id") * 7919 % 100003).as("v"))
+      .write.option("parquet.block.size", "8192").parquet(s"$root/groups")
+    val dictFile = parquetFiles(s"$root/dict").head
+    assert(footer(dictFile).getBlocks.asScala.head.getColumns.asScala
+      .exists(_.hasDictionaryPage), "the fixture has no dictionary page")
+    assert(footer(parquetFiles(s"$root/groups").head).getBlocks.size > 1,
+      "the fixture has one row group")
+    assert(parquetFiles(s"$root/log").size == 2)
+    for (d <- Seq("v1", "v2", "current", "log", "dict", "groups")) {
+      val dir = s"$root/$d"
+      val expected = parquetFiles(dir).flatMap(example)
+      assert(expected.nonEmpty)
+      assert(TinyParquet.readGroups(spark, dir).map(_.toString) == expected,
+        s"readGroups differs on $d")
+      parquetFiles(dir).foreach(f => assert(
+        TinyParquet.readGroupsFile(spark, f).map(_.toString) == example(f),
+        s"readGroupsFile differs on $f"))
+    }
+    assert(TinyParquet.readGroups(spark, s"$root/log")
+      .map(r => r.getLong("batch", 0) -> r.getFieldRepetitionCount("rows"))
+      .sorted == Seq(1L -> 1, 2L -> 0, 3L -> 0))
+    assert(TinyParquet.readGroups(spark, s"$root/groups").size == 20000)
   }
 }
