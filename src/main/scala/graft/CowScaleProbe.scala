@@ -3,27 +3,21 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.sources.CorpusStore
+import graft.sources.{BatchLog, CorpusStore}
 
-/** COW-vs-full takedown cost probe (round 15 — backs the §4 numbers
-  * for the CorpusStore copy-on-write claim with measurements, the
+/** CorpusStore takedown and ingest cost probe (round 15 — backs the
+  * §4 numbers for the copy-on-write claim with measurements, the
   * takedown-crossover/k-means-probe convention): replicate the
   * documents table to several corpus sizes, then time a k-doc
   * takedown (k = SPARK_GRAFT_COW_TAKEDOWN, default 10 — the §4 run)
-  * through
-  *
-  *  (a) the COW layout (`deleteFromCorpusCow` — rewrites only the
-  *      buckets the 100 ids hash into), and
-  *  (b) the full layout (read CURRENT, anti-join, writeCorpusSnapshot
-  *      — the materialize-everything cost COW exists to retire),
-  *
-  * reporting wall time and the BYTES each new generation wrote
-  * (du over the generation's data tree — the metric that scales to
-  * 100 TB, where wall time is cluster-dependent but write volume is
-  * not). Expectation: full-layout bytes grow linearly with the
-  * corpus; COW bytes grow with corpus/numBuckets (the touched-bucket
-  * size), i.e. the takedown's write volume is ~min(k, N)/N of the
-  * corpus per replication step.
+  * through `deleteFromCorpusCow`, which rewrites only the buckets the
+  * k ids hash into, reporting wall time and the BYTES the new
+  * generation wrote next to the founding generation's bytes (du over
+  * each generation's data tree — the metric that scales to 100 TB,
+  * where wall time is cluster-dependent but write volume is not).
+  * The founding bytes are what a full snapshot writes; the takedown's
+  * bytes grow with corpus/numBuckets (the touched-bucket size), i.e.
+  * ~min(k, N)/N of the corpus per replication step.
   *
   * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=16 \
   *   sbt "runMain graft.CowScaleProbe 1 4 16"
@@ -74,7 +68,7 @@ object CowScaleProbe {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
     if (sections("takedown")) {
-    println("rep,n_docs,layout,init_sec,takedown_sec,gen_bytes,corpus_bytes")
+    println("rep,n_docs,init_sec,takedown_sec,gen_bytes,corpus_bytes")
     reps.foreach { rep =>
       // replicate with disjoint ids: content replicates, ids stay
       // unique
@@ -98,22 +92,7 @@ object CowScaleProbe {
       }
       val cowGenBytes = du(s"$cowDir/parts/gen=1")
       val cowCorpusBytes = du(s"$cowDir/parts/gen=0")
-      println(s"$rep,$n,cow,$cowInit,$cowDel,$cowGenBytes,$cowCorpusBytes")
-
-      val fullDir = java.nio.file.Files
-        .createTempDirectory(s"graft-fullprobe-$rep").toString
-      val (_, fullInit) = time {
-        CorpusStore.writeCorpusSnapshot(corpus, fullDir)
-      }
-      val (_, fullDel) = time {
-        CorpusStore.writeCorpusSnapshot(
-          CorpusStore.readCorpusSnapshot(spark, fullDir)
-            .join(doomed, Seq("doc_id"), "left_anti"),
-          fullDir)
-      }
-      val fullGenBytes = du(s"$fullDir/snapshots/gen=1")
-      val fullCorpusBytes = du(s"$fullDir/snapshots/gen=0")
-      println(s"$rep,$n,full,$fullInit,$fullDel,$fullGenBytes,$fullCorpusBytes")
+      println(s"$rep,$n,$cowInit,$cowDel,$cowGenBytes,$cowCorpusBytes")
     }
     }
 
@@ -227,9 +206,9 @@ object CowScaleProbe {
     }
 
     // ——— Ingest-log replay-guard cost (round 17 — verdict task 1):
-    // the per-trigger `ingestLogContains` probe BEFORE the fold (one
+    // the per-trigger `BatchLog.contains` probe BEFORE the fold (one
     // file per logged batch, all listed+footer-read) vs AFTER
-    // `compactIngestLog` (watermark pointer read + single-file scan).
+    // `BatchLog.compact` (watermark pointer read + single-file scan).
     // Round 18: the fold generalized into graft.sources.BatchLog and
     // the ANN serving loops' `serve_log` (Similarity.compactServeLog)
     // plus the index ingest loop's log ride the SAME module, so this
@@ -259,14 +238,14 @@ object CowScaleProbe {
           Some(i + 1), 1L))
       def probeMs(id: Long): Double = {
         val t0 = System.nanoTime()
-        CorpusStore.ingestLogContains(spark, logPath, id)
+        BatchLog.contains(spark, logPath, id)
         (System.nanoTime() - t0) / 1e6
       }
-      val tailBefore = CorpusStore.ingestLogTailFiles(spark, logPath).size
+      val tailBefore = BatchLog.tailFiles(spark, logPath).size
       val loggedBefore = probeMs(nb / 2L)
       val freshBefore = probeMs(nb + 100L)
-      val (_, foldSec) = time(CorpusStore.compactIngestLog(spark, logPath))
-      val tailAfter = CorpusStore.ingestLogTailFiles(spark, logPath).size
+      val (_, foldSec) = time(BatchLog.compact(spark, logPath))
+      val tailAfter = BatchLog.tailFiles(spark, logPath).size
       val loggedAfter = probeMs(nb / 2L) // watermark pointer read
       val freshAfter = probeMs(nb + 100L) // one-file scan
       println(f"$nb,$tailBefore,$loggedBefore%.1f,$freshBefore%.1f," +

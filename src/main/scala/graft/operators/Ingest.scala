@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.CorpusStore
+import graft.sources.{BatchLog, CorpusStore}
 
 /** Cross-store ingest orchestration (round 15 — the admission mirror
   * of [[Takedown.takedownEverywhere]]): one foreachBatch body that
@@ -56,7 +56,7 @@ object Ingest {
                        (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val logPath = s"$corpusPath/ingest_log"
-    val replayed = CorpusStore.ingestLogContains(spark, logPath, batchId)
+    val replayed = BatchLog.contains(spark, logPath, batchId)
     if (replayed) return
     val (idCol, _) = CorpusStore.cowKey(spark, corpusPath)
     // the batch must carry the corpus row schema; text is the

@@ -4244,8 +4244,8 @@ object Similarity {
     * [[hnswServeBatch]]) into one file + watermark — the maintenance
     * action that keeps a long-lived serving stream's replay probe a
     * pointer read (round 18 — r17 verdict task 2; the
-    * [[graft.sources.CorpusStore.compactIngestLog]] idiom via the
-    * shared [[graft.sources.BatchLog]]). Content-neutral and
+    * corpus store's ingest-log fold, through the shared
+    * [[graft.sources.BatchLog.compact]]). Content-neutral and
     * crash-convergent; run it on the index-maintenance cadence.
     * Returns the number of tail files folded.
     */

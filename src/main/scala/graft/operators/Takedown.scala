@@ -95,14 +95,11 @@ object Takedown {
         "ledger is keyed by content hash and the doomed rows' text " +
         "resolves from the CURRENT corpus")
     // fail fast BEFORE any store mutates (round 16 — ADVICE): a
-    // full-layout corpus would only be rejected at step 4, after the
-    // index tombstones and the ledger delete had already landed —
-    // leaving a half-applied takedown (probe-invisible, ledger-
-    // cleared, still in the corpus) with no report
-    require(targets.corpusPath.forall(cp => CorpusStore.isCow(spark, cp)),
-      "takedownEverywhere: corpusPath is not a copy-on-write store — " +
-        "only COW corpora support bucket-local takedowns; rewrite a " +
-        "full-layout store via writeCorpusSnapshot with an anti-join")
+    // corpusPath that is not a store would only be rejected at step 4,
+    // after the index tombstones and the ledger delete had already
+    // landed — leaving a half-applied takedown (probe-invisible,
+    // ledger-cleared, still in the corpus) with no report
+    targets.corpusPath.foreach(cp => CorpusStore.requireStore(spark, cp))
     // pin the request before anything mutates
     val del = ids.select(col(idCol)).distinct().localCheckpoint()
     val nRequested = del.count()

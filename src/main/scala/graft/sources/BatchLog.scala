@@ -24,10 +24,9 @@ import org.apache.spark.sql.functions._
   *    swap, record the watermark, delete the folded tail.
   *
   * The log's SCHEMA is the caller's — any columns plus a `batch_id`
-  * castable to long (`normalize` reconciles historical column drift,
-  * the ingest log's mixed-writer legacy). Crash-safe by the store's
-  * commit ordering — (1) materialize in a generation-private dir no
-  * reader resolves, (2) one atomic pointer rename publishes, (3) the
+  * castable to long. Crash-safe by the store's commit ordering —
+  * (1) materialize in a generation-private dir no reader resolves,
+  * (2) one atomic pointer rename publishes, (3) the
   * watermark commits (conservative: computed from exactly the folded
   * ids), (4) superseded generations and the snapshotted tail delete —
   * with the fold's writer token verified immediately before the
@@ -140,8 +139,8 @@ private[graft] object BatchLog {
     // per trigger on metadata-scale files. The probe only needs
     // `batch_id`, read here through the example Group API with an
     // early exit on the first hit; a file whose batch_id is not a
-    // plain int32/int64 (the normalize-reconciled legacy shapes are)
-    // falls back to the old Spark scan rather than guessing.
+    // plain int32/int64 falls back to the Spark scan rather than
+    // guessing.
     def fileHas(p: org.apache.hadoop.fs.Path): Boolean =
       TinyParquet.readGroupsFile(spark, p).exists { g =>
         val t = g.getType
@@ -211,11 +210,9 @@ private[graft] object BatchLog {
   /** Fold the whole logged history — previous compact file plus every
     * tail file — into ONE sorted parquet file, record the watermark,
     * and retire every superseded generation and the folded tail.
-    * `normalize` projects each source to the log's canonical shape
-    * (identity by default). Returns the number of tail files folded.
+    * Returns the number of tail files folded.
     */
-  def compact(spark: SparkSession, logPath: String,
-      normalize: DataFrame => DataFrame = identity): Int = {
+  def compact(spark: SparkSession, logPath: String): Int = {
     import spark.implicits._
     val tail = tailFiles(spark, logPath)
     val root = s"${logPath}_compact"
@@ -228,7 +225,7 @@ private[graft] object BatchLog {
     if (tail.isEmpty && prevFile.isDefined) return 0
     val srcs = prevFile.toSeq ++ tail.map(n => s"$logPath/$n")
     if (srcs.isEmpty) return 0
-    val all = normalize(spark.read.parquet(srcs: _*))
+    val all = spark.read.parquet(srcs: _*)
       .withColumn("batch_id", col("batch_id").cast("long"))
       .dropDuplicates("batch_id")
     val gen = prev.map(_ + 1).getOrElse(0)

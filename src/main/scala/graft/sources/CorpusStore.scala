@@ -9,23 +9,12 @@ import graft.operators.Dedup
 /** Versioned corpus snapshots: the BM25 index's generation-pointer
   * idiom (Retrieval.scala `CURRENT` protocol) applied to the corpus
   * ITSELF, so "which exact dataset version did run X train on?" has a
-  * first-class answer. Two storage layouts share one commit protocol:
+  * first-class answer. One copy-on-write layout under `path`:
   *
-  * FULL layout (round 14) under `path`:
-  *  - `snapshots/gen=<g>/` — one IMMUTABLE parquet tree per version
-  *    (whatever schema the caller's pipeline produces);
-  *  - `meta/gen=<g>/` — a 1-row (gen, n_rows) manifest so listing
-  *    versions never scans data;
-  *  - `CURRENT` — "g" or "g b": the committed generation g and the
-  *    oldest RETAINED generation b (b moves only at vacuum time).
-  *    Both numbers ride one file so they commit in one atomic rename.
-  *
-  * COPY-ON-WRITE layout (round 15 — verdict task 1) under `path`:
-  *  - `cowmeta/` — 1 row (id_col, num_buckets): the store's OWN
-  *    content-defined partitioning (bucket = pmod(xxhash64(id), N)),
-  *    recorded at init; since round 16 the EFFECTIVE bucket count is
-  *    the CURRENT generation's (see `rebucketCorpusCow`), cowmeta's
-  *    value is the id column's home plus the pre-rebucket fallback;
+  *  - `cowmeta/` — 1 row (id_col): the column the store's OWN
+  *    content-defined partitioning hashes (bucket =
+  *    pmod(xxhash64(id), N)), fixed at init; the bucket count N is
+  *    each generation's own (see `rebucketCorpusCow`);
   *  - `parts/gen=<g>/_cs_bucket=<b>/` — immutable PER-BUCKET BASE
   *    trees; a generation writes ONLY the buckets it touches;
   *  - `deltas/gen=<g>/_cs_bucket=<b>/` — immutable PER-BUCKET DELTA
@@ -40,18 +29,19 @@ import graft.operators.Dedup
   *    rewrite folds deltas away) plus zero or more DELTA/TOMBSTONE
   *    trees in src_gen order; `n_rows` is the tree's physical rows,
   *    `live_rows` the bucket's exact live count after
-  *    last-writer-wins (denormalized on each row). A v1 manifest (no
-  *    `is_delta` column — the round-15 base-only format) reads as
-  *    all-base with live_rows = n_rows; a v2 manifest (no
-  *    `is_tombstone`) as tombstone-free;
+  *    last-writer-wins (denormalized on each row);
   *  - `meta/gen=<g>/` — (gen, n_rows, num_buckets): the version's
   *    exact live row count and the bucket count it was written under
-  *    (the rebucket contract — see below); `CURRENT` as above.
+  *    (the rebucket contract — see below);
+  *  - `CURRENT` — "g" or "g b": the committed generation g and the
+  *    oldest RETAINED generation b (b moves only at vacuum time).
+  *    Both numbers ride one file so they commit in one atomic rename.
   *
-  * Why COW: in the full layout a takedown of 100 docs from a 100 TB
-  * corpus costs a 100 TB write ([[writeCorpusSnapshot]] materializes
-  * every generation). Under COW, [[deleteFromCorpusCow]] /
-  * [[upsertIntoCorpusCow]] read and rewrite ONLY the buckets the
+  * A full snapshot is [[writeCorpusCow]] on an existing store: a
+  * base-only generation that owns every bucket. Everything else
+  * avoids that corpus-sized write: a takedown of 100 docs from a
+  * 100 TB corpus through [[deleteFromCorpusCow]] /
+  * [[upsertIntoCorpusCow]] reads and rewrites ONLY the buckets the
   * changed ids hash into — cost = touched/num_buckets of the corpus —
   * and untouched buckets are SHARED across generations through the
   * manifest.
@@ -94,22 +84,27 @@ import graft.operators.Dedup
   * FULL-REWRITE generation under a new bucket count; each
   * generation's meta row records the count it was written under, and
   * every write-side bucketing decision resolves the CURRENT
-  * generation's count (never cowmeta's init value), so the swap is
-  * atomic with the CURRENT rename — a crash anywhere before it leaves
-  * the old bucketing fully in force. Older generations keep reading
-  * through their own manifests (reads never consult num_buckets), and
-  * vacuum's reference counting keys on (tree-kind, src_gen, bucket),
-  * which never collides across bucketings.
+  * generation's count, so the swap is atomic with the CURRENT
+  * rename — a crash anywhere before it leaves the old bucketing fully
+  * in force. Older generations keep reading through their own
+  * manifests (reads never consult num_buckets), and vacuum's
+  * reference counting keys on (tree-kind, src_gen, bucket), which
+  * never collides across bucketings.
   *
-  * The pointer is the commit, in both layouts: a writer materializes
-  * everything into generation-private directories no reader ever
-  * lists, and the version becomes visible only when the `CURRENT`
-  * rename lands. Readers resolve the pointer ONCE (at DataFrame
-  * construction) to explicit generation paths, and generation
-  * directories are never mutated after commit — so a reader that
-  * resolved before a swap keeps reading its version bit-identically
-  * while new readers see the new one (concurrent-reader safety across
-  * swaps is spec-pinned in CorpusStoreSpec).
+  * The pointer is the commit: a writer materializes everything into
+  * generation-private directories no reader ever lists, and the
+  * version becomes visible only when the `CURRENT` rename lands.
+  * Readers resolve the pointer ONCE (at DataFrame construction) to
+  * explicit generation paths, and generation directories are never
+  * mutated after commit — so a reader that resolved before a swap
+  * keeps reading its version bit-identically while new readers see
+  * the new one (concurrent-reader safety across swaps is spec-pinned
+  * in CorpusStoreSpec).
+  *
+  * Every public entry point first checks that `path` IS a store
+  * (`cowmeta` present), so a BM25 index or a plain parquet directory
+  * — which may carry a `CURRENT` of its own — is refused before
+  * anything reads or rewrites it.
   *
   * COW READ PLANNING AND COMMIT COUNTS START NO SPARK JOB: pointer,
   * manifest, meta and schema records are read on the driver
@@ -137,13 +132,12 @@ import graft.operators.Dedup
   * the FileSystem API lacks), not a lock. Serialize writers
   * externally; readers need nothing.
   *
-  * Retention is [[vacuumCorpusSnapshots]] in both layouts: the new
-  * base commits in ONE atomic rename FIRST, then doomed directories
-  * are deleted — under COW with a REFERENCE COUNT over BOTH tree
-  * kinds: a base or delta tree of a vacuumed generation survives
-  * while any retained generation's manifest still points at it
-  * (spec-pinned), so sharing never breaks a live version.
-  * Between-version review is [[snapshotDelta]] —
+  * Retention is [[vacuumCorpusSnapshots]]: the new base commits in
+  * ONE atomic rename FIRST, then doomed directories are deleted with
+  * a REFERENCE COUNT over BOTH tree kinds: a base or delta tree of a
+  * vacuumed generation survives while any retained generation's
+  * manifest still points at it (spec-pinned), so sharing never breaks
+  * a live version. Between-version review is [[snapshotDelta]] —
   * [[graft.operators.Dedup.snapshotDiff]] over two committed
   * generations: the full-outer exchange carries (id, 8-byte hash),
   * never document text.
@@ -157,31 +151,43 @@ object CorpusStore {
   private def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
 
-  /** Driver-direct parquet I/O of the TINY metadata trees (r20
-    * optimization — guide §5): see [[TinyParquet]] for the layout
-    * and schema-parity contract.
-    */
-  private def writeTinyParquet(spark: SparkSession, dir: String,
-      parquetSchema: String, rows: Seq[Seq[Any]]): Unit =
-    TinyParquet.write(spark, dir, parquetSchema, rows)
-
-  /** Whether the store at `path` is copy-on-write. */
+  /** Whether `path` holds a copy-on-write store. */
   def isCow(spark: SparkSession, path: String): Boolean =
     exists(spark, s"$path/cowmeta")
+
+  /** The one store guard every public entry point runs first (and
+    * `Takedown` and the `graft-corpus` source with it): `path` must
+    * be a store — or, for `init` ([[writeCorpusCow]] founding a
+    * store), a directory that does not exist or holds nothing yet.
+    * A BM25 index or a plain parquet directory fails here, before
+    * anything reads or rewrites it, whatever `CURRENT` it carries.
+    */
+  private[graft] def requireStore(spark: SparkSession, path: String,
+      init: Boolean = false): Unit = {
+    def vacant = {
+      val f = fs(spark, path)
+      val p = new org.apache.hadoop.fs.Path(path)
+      !f.exists(p) || f.listStatus(p).isEmpty
+    }
+    require(isCow(spark, path) || (init && vacant),
+      s"CorpusStore: $path is not a copy-on-write store")
+  }
 
   /** The committed (gen, base) pair from `CURRENT` (the shared
     * [[GenPointer]] protocol — race-free read, see there); fails fast
     * on a store that was never committed.
     */
   def currentGen(spark: SparkSession, path: String): (Int, Int) = {
+    requireStore(spark, path)
+    pointer(spark, path)
+  }
+
+  /** [[currentGen]] without the store guard, for callers past it. */
+  private def pointer(spark: SparkSession, path: String): (Int, Int) = {
     require(GenPointer.exists(spark, path),
       s"CorpusStore: no CURRENT at $path — no committed snapshot")
     GenPointer.read(spark, path)
   }
-
-  private def commitCurrent(spark: SparkSession, path: String,
-                            gen: Int, base: Int): Unit =
-    GenPointer.commit(spark, path, gen, base)
 
   /** Best-effort concurrent-writer tripwire (see the module doc's
     * single-writer contract), in two halves so the guarded window
@@ -238,43 +244,6 @@ object CorpusStore {
             "writers and retry.")
     }
 
-  // ——— Full-materialization layout ——————————————————————————————————
-
-  /** Commit `df` as the next corpus version and return its generation
-    * (0 for a fresh store). The data and manifest land in
-    * generation-private directories in OVERWRITE mode — a crashed
-    * attempt's orphan is truncated on retry, making the write
-    * idempotent — and only then does the atomic CURRENT rename
-    * publish the version. The input may itself read the current
-    * committed generation (read-modify-write): source and destination
-    * directories never coincide. Full layout only — a COW store's
-    * versions are written by [[writeCorpusCow]] /
-    * [[upsertIntoCorpusCow]] / [[deleteFromCorpusCow]] /
-    * [[appendDeltaToCorpusCow]].
-    */
-  def writeCorpusSnapshot(df: DataFrame, path: String): Int = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    require(!isCow(spark, path),
-      s"CorpusStore: $path is a copy-on-write store — use " +
-        "writeCorpusCow/upsertIntoCorpusCow/deleteFromCorpusCow")
-    val (gen, base) =
-      if (GenPointer.exists(spark, path))
-        currentGen(spark, path) match { case (g, b) => (g + 1, b) }
-      else (0, 0)
-    df.write.mode("overwrite").parquet(s"$path/snapshots/gen=$gen")
-    val dataStamp = stampWriterToken(spark, s"$path/snapshots/gen=$gen")
-    val n = TinyParquet.rowCount(spark, s"$path/snapshots/gen=$gen")
-    Seq((gen, n)).toDF("gen", "n_rows")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta/gen=$gen")
-    val metaStamp = stampWriterToken(spark, s"$path/meta/gen=$gen")
-    verifyWriterTokens(spark, Seq(dataStamp, metaStamp))
-    commitCurrent(spark, path, gen, base)
-    gen
-  }
-
-  // ——— Copy-on-write layout —————————————————————————————————————————
-
   /** One tree of one bucket: the generation that wrote it, whether it
     * is a delta (under `deltas/`) or a base (under `parts/`), whether
     * it is a TOMBSTONE tree (id-only delete markers — tombstones are
@@ -307,58 +276,34 @@ object CorpusStore {
     TinyParquet.readGroups(spark, s"$path/cowmeta").head
       .getString("id_col", 0)
 
-  private def cowMetaNumBuckets(spark: SparkSession, path: String): Int =
-    TinyParquet.readGroups(spark, s"$path/cowmeta").head
-      .getInteger("num_buckets", 0)
-
   /** The bucket count writes must use: the CURRENT generation's meta
     * `num_buckets` (the rebucket contract — the count swaps atomically
-    * with the CURRENT rename), falling back to cowmeta's init value
-    * for metas written before the column existed.
+    * with the CURRENT rename).
     */
-  private def effectiveNumBuckets(spark: SparkSession, path: String): Int = {
-    val (g, _) = currentGen(spark, path)
-    val meta = TinyParquet.readGroups(spark, s"$path/meta/gen=$g").head
-    if (meta.getType.containsField("num_buckets"))
-      meta.getInteger("num_buckets", 0)
-    else cowMetaNumBuckets(spark, path)
-  }
+  private def effectiveNumBuckets(spark: SparkSession, path: String): Int =
+    TinyParquet.readGroups(spark,
+      s"$path/meta/gen=${pointer(spark, path)._1}").head
+      .getInteger("num_buckets", 0)
 
   /** (bucket → its trees + live count) of version `gen`'s manifest —
     * bounded by num_buckets × retained deltas. Carrying exact counts
     * in the manifest keeps occupancy/health METADATA-scale (the
     * IndexHealth stance) and lets modifications derive their counts
-    * from the previous manifest instead of re-counting. A v1 manifest
-    * (round 15 — no `is_delta` column) reads as all-base with
-    * live_rows = n_rows.
+    * from the previous manifest instead of re-counting.
     */
   private def readCowManifest(spark: SparkSession, path: String,
-                              gen: Int): Map[Int, CowBucket] = {
-    val groups = TinyParquet.readGroups(spark, s"$path/manifest/gen=$gen")
-    if (groups.nonEmpty && groups.head.getType.containsField("is_delta")) {
-      // v2 manifests (no is_tombstone column) are tombstone-free
-      val hasTomb = groups.head.getType.containsField("is_tombstone")
-      groups
-        .map(g => (g.getInteger("bucket", 0),
-          CowEntry(g.getInteger("src_gen", 0),
-            g.getBoolean("is_delta", 0),
-            g.getLong("n_rows", 0),
-            isTombstone = hasTomb && g.getBoolean("is_tombstone", 0)),
-          g.getLong("live_rows", 0)))
-        .groupBy(_._1)
-        .map { case (b, rows) =>
-          b -> CowBucket(rows.head._3, sortEntries(rows.map(_._2).toSeq))
-        }
-    } else
-      groups
-        .map { g =>
-          val n = g.getLong("n_rows", 0)
-          g.getInteger("bucket", 0) ->
-            CowBucket(n,
-              Seq(CowEntry(g.getInteger("src_gen", 0), isDelta = false, n)))
-        }
-        .toMap
-  }
+                              gen: Int): Map[Int, CowBucket] =
+    TinyParquet.readGroups(spark, s"$path/manifest/gen=$gen")
+      .map(g => (g.getInteger("bucket", 0),
+        CowEntry(g.getInteger("src_gen", 0),
+          g.getBoolean("is_delta", 0),
+          g.getLong("n_rows", 0),
+          isTombstone = g.getBoolean("is_tombstone", 0)),
+        g.getLong("live_rows", 0)))
+      .groupBy(_._1)
+      .map { case (b, rows) =>
+        b -> CowBucket(rows.head._3, sortEntries(rows.map(_._2)))
+      }
 
   private def cowEntryDir(path: String, bucket: Int, e: CowEntry): String =
     if (e.isDelta) s"$path/deltas/gen=${e.srcGen}/_cs_bucket=$bucket"
@@ -575,48 +520,58 @@ object CorpusStore {
     */
   def evolveCorpusCowSchema(spark: SparkSession, path: String,
       newCols: org.apache.spark.sql.types.StructType,
-      defaults: Map[String, String] = Map.empty): Int = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
-    require(newCols.nonEmpty, "evolveCorpusCowSchema: no columns to add")
-    val (g, base) = currentGen(spark, path)
-    val manifest = readCowManifest(spark, path, g)
-    val old = storeRowSchemaAt(spark, path, g, manifest)
-    val clash = newCols.fieldNames.toSet.intersect(old.fieldNames.toSet)
-    require(clash.isEmpty,
-      s"evolveCorpusCowSchema: column(s) ${clash.toSeq.sorted.mkString(", ")} " +
-        "already exist — evolution is add-nullable-column only; a type " +
-        "or meaning change is a full rewrite (writeCorpusCow)")
-    val retiredClash =
-      newCols.fieldNames.toSet.intersect(retiredNames(spark, path, old))
-    require(retiredClash.isEmpty,
-      s"evolveCorpusCowSchema: column(s) " +
-        s"${retiredClash.toSeq.sorted.mkString(", ")} were dropped or " +
-        "renamed away in an earlier epoch and retained trees still " +
-        "carry values under that name — re-adding would resurrect " +
-        "them at read time; pick a fresh name (name-based resolution " +
-        "is the price of metadata-only evolution)")
-    val orphanDefaults = defaults.keySet -- newCols.fieldNames.toSet
-    require(orphanDefaults.isEmpty,
-      s"evolveCorpusCowSchema: defaults for unknown column(s) " +
-        orphanDefaults.toSeq.sorted.mkString(", "))
-    val added = newCols.fields.map { f =>
-      val md = defaults.get(f.name).map { d =>
-        new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata).putString(DefaultKey, d).build()
-      }.getOrElse(f.metadata)
-      f.copy(nullable = true, metadata = md)
+      defaults: Map[String, String] = Map.empty): Int =
+    commitSchemaGen(spark, path) { old =>
+      require(newCols.nonEmpty, "evolveCorpusCowSchema: no columns to add")
+      val clash = newCols.fieldNames.toSet.intersect(old.fieldNames.toSet)
+      require(clash.isEmpty,
+        s"evolveCorpusCowSchema: column(s) ${clash.toSeq.sorted.mkString(", ")} " +
+          "already exist — evolution is add-nullable-column only; a type " +
+          "or meaning change is a full rewrite (writeCorpusCow)")
+      val retiredClash =
+        newCols.fieldNames.toSet.intersect(retiredNames(spark, path, old))
+      require(retiredClash.isEmpty,
+        s"evolveCorpusCowSchema: column(s) " +
+          s"${retiredClash.toSeq.sorted.mkString(", ")} were dropped or " +
+          "renamed away in an earlier epoch and retained trees still " +
+          "carry values under that name — re-adding would resurrect " +
+          "them at read time; pick a fresh name (name-based resolution " +
+          "is the price of metadata-only evolution)")
+      val orphanDefaults = defaults.keySet -- newCols.fieldNames.toSet
+      require(orphanDefaults.isEmpty,
+        s"evolveCorpusCowSchema: defaults for unknown column(s) " +
+          orphanDefaults.toSeq.sorted.mkString(", "))
+      val added = newCols.fields.map { f =>
+        val md = defaults.get(f.name).map { d =>
+          new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata).putString(DefaultKey, d).build()
+        }.getOrElse(f.metadata)
+        f.copy(nullable = true, metadata = md)
+      }
+      // force-analyze every filler NOW: a misspelled function or a
+      // column reference in a default must fail the evolve
+      spark.range(0).select(added.map(f => fillExpr(f).as(f.name)).toSeq: _*)
+        .queryExecution.analyzed
+      org.apache.spark.sql.types.StructType(old.fields ++ added)
     }
-    val target = org.apache.spark.sql.types.StructType(old.fields ++ added)
-    // force-analyze every filler NOW: a misspelled function or a
-    // column reference in a default must fail the evolve
-    spark.range(0).select(added.map(f => fillExpr(f).as(f.name)).toSeq: _*)
-      .queryExecution.analyzed
+
+  /** The frame the three metadata-only schema operations share: the
+    * store guard, CURRENT's manifest and row schema, then one
+    * generation that re-points at every existing tree (zero data
+    * bytes) and records the schema `reshape` derives from the old one
+    * — after `reshape` has run the operation's own validation.
+    */
+  private def commitSchemaGen(spark: SparkSession, path: String)(
+      reshape: org.apache.spark.sql.types.StructType =>
+        org.apache.spark.sql.types.StructType): Int = {
+    requireStore(spark, path)
+    val (g, base) = pointer(spark, path)
+    val manifest = readCowManifest(spark, path, g)
+    val target = reshape(storeRowSchemaAt(spark, path, g, manifest))
     val gen = g + 1
-    val schemaStamp = writeSchemaFile(spark, path, gen, target)
     commitCowGen(spark, path, gen, base, manifest,
-      effectiveNumBuckets(spark, path), Seq(schemaStamp),
-      wroteSchema = true)
+      effectiveNumBuckets(spark, path),
+      Seq(writeSchemaFile(spark, path, gen, target)), wroteSchema = true)
   }
 
   /** Every column name any recorded epoch (or the founding footer
@@ -635,7 +590,7 @@ object CorpusStore {
       sc.fieldNames.toSeq ++ sc.fields.flatMap(renamedFrom)
     }
     val founding = storeRowSchema(spark, path,
-      readCowManifest(spark, path, currentGen(spark, path)._1))
+      readCowManifest(spark, path, pointer(spark, path)._1))
       .fieldNames.toSeq
     (recorded ++ founding).toSet --
       (current.fieldNames.toSeq ++ current.fields.flatMap(renamedFrom))
@@ -670,31 +625,22 @@ object CorpusStore {
     * (upsert/compaction/rebucket materialize the current shape).
     */
   def dropCorpusCowColumns(spark: SparkSession, path: String,
-      cols: Seq[String]): Int = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
-    require(cols.nonEmpty, "dropCorpusCowColumns: no columns to drop")
-    val (g, base) = currentGen(spark, path)
-    val manifest = readCowManifest(spark, path, g)
-    val old = storeRowSchemaAt(spark, path, g, manifest)
-    val missing = cols.filterNot(old.fieldNames.contains)
-    require(missing.isEmpty,
-      s"dropCorpusCowColumns: column(s) ${missing.sorted.mkString(", ")} " +
-        s"not in the store's row schema " +
-        old.fieldNames.sorted.mkString("(", ", ", ")"))
-    val idc = cowIdCol(spark, path)
-    require(!cols.contains(idc),
-      s"dropCorpusCowColumns: $idc is the store's id/bucketing column " +
-        "— dropping it would orphan every keyed operation; that is a " +
-        "full rewrite under a new key (writeCorpusCow)")
-    val target = org.apache.spark.sql.types.StructType(
-      old.fields.filterNot(f => cols.contains(f.name)))
-    val gen = g + 1
-    val schemaStamp = writeSchemaFile(spark, path, gen, target)
-    commitCowGen(spark, path, gen, base, manifest,
-      effectiveNumBuckets(spark, path), Seq(schemaStamp),
-      wroteSchema = true)
-  }
+      cols: Seq[String]): Int =
+    commitSchemaGen(spark, path) { old =>
+      require(cols.nonEmpty, "dropCorpusCowColumns: no columns to drop")
+      val missing = cols.filterNot(old.fieldNames.contains)
+      require(missing.isEmpty,
+        s"dropCorpusCowColumns: column(s) ${missing.sorted.mkString(", ")} " +
+          s"not in the store's row schema " +
+          old.fieldNames.sorted.mkString("(", ", ", ")"))
+      val idc = cowIdCol(spark, path)
+      require(!cols.contains(idc),
+        s"dropCorpusCowColumns: $idc is the store's id/bucketing column " +
+          "— dropping it would orphan every keyed operation; that is a " +
+          "full rewrite under a new key (writeCorpusCow)")
+      org.apache.spark.sql.types.StructType(
+        old.fields.filterNot(f => cols.contains(f.name)))
+    }
 
   /** Rename a column as a METADATA-ONLY generation (round 19, the
     * [[dropCorpusCowColumns]] twin): the recorded schema carries the
@@ -704,42 +650,33 @@ object CorpusStore {
     * trees. The old name retires like a dropped one.
     */
   def renameCorpusCowColumn(spark: SparkSession, path: String,
-      from: String, to: String): Int = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
-    val (g, base) = currentGen(spark, path)
-    val manifest = readCowManifest(spark, path, g)
-    val old = storeRowSchemaAt(spark, path, g, manifest)
-    require(old.fieldNames.contains(from),
-      s"renameCorpusCowColumn: no column $from in " +
-        old.fieldNames.sorted.mkString("(", ", ", ")"))
-    require(!old.fieldNames.contains(to),
-      s"renameCorpusCowColumn: column $to already exists")
-    val retired = retiredNames(spark, path, old)
-    require(!retired.contains(to),
-      s"renameCorpusCowColumn: $to was dropped or renamed away in an " +
-        "earlier epoch and retained trees still carry values under " +
-        "that name — pick a fresh name")
-    val idc = cowIdCol(spark, path)
-    require(from != idc,
-      s"renameCorpusCowColumn: $from is the store's id/bucketing " +
-        "column — keyed operations resolve it by the recorded name; " +
-        "renaming it is a full rewrite (writeCorpusCow)")
-    val target = org.apache.spark.sql.types.StructType(old.fields.map { f =>
-      if (f.name != from) f
-      else f.copy(name = to,
-        metadata = new org.apache.spark.sql.types.MetadataBuilder()
-          .withMetadata(f.metadata)
-          .putStringArray(RenamedFromKey,
-            ((from +: renamedFrom(f)).distinct.filterNot(_ == to)).toArray)
-          .build())
-    })
-    val gen = g + 1
-    val schemaStamp = writeSchemaFile(spark, path, gen, target)
-    commitCowGen(spark, path, gen, base, manifest,
-      effectiveNumBuckets(spark, path), Seq(schemaStamp),
-      wroteSchema = true)
-  }
+      from: String, to: String): Int =
+    commitSchemaGen(spark, path) { old =>
+      require(old.fieldNames.contains(from),
+        s"renameCorpusCowColumn: no column $from in " +
+          old.fieldNames.sorted.mkString("(", ", ", ")"))
+      require(!old.fieldNames.contains(to),
+        s"renameCorpusCowColumn: column $to already exists")
+      val retired = retiredNames(spark, path, old)
+      require(!retired.contains(to),
+        s"renameCorpusCowColumn: $to was dropped or renamed away in an " +
+          "earlier epoch and retained trees still carry values under " +
+          "that name — pick a fresh name")
+      val idc = cowIdCol(spark, path)
+      require(from != idc,
+        s"renameCorpusCowColumn: $from is the store's id/bucketing " +
+          "column — keyed operations resolve it by the recorded name; " +
+          "renaming it is a full rewrite (writeCorpusCow)")
+      org.apache.spark.sql.types.StructType(old.fields.map { f =>
+        if (f.name != from) f
+        else f.copy(name = to,
+          metadata = new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(f.metadata)
+            .putStringArray(RenamedFromKey,
+              ((from +: renamedFrom(f)).distinct.filterNot(_ == to)).toArray)
+            .build())
+      })
+    }
 
   /** One tree of a read as [[CowFileIndex]] sees it: its directory,
     * its last-writer-wins rank (`src_gen` for a delta, 0 for a base —
@@ -874,11 +811,11 @@ object CorpusStore {
     }
     // manifest and meta are tiny driver-resident trees (bounded by
     // num_buckets × retained deltas, resp. 1 row) — written
-    // driver-direct through [[writeTinyParquet]] instead of paying
+    // driver-direct through [[TinyParquet.write]] instead of paying
     // two Spark jobs per commit (r20 optimization, replacing r19's
     // overlapped-jobs shape; the rows live in `manifest`, a plain
     // Map, so no cluster work is skipped — only job scheduling)
-    writeTinyParquet(spark, s"$path/manifest/gen=$gen",
+    TinyParquet.write(spark, s"$path/manifest/gen=$gen",
       """message spark_schema {
         |  required int32 bucket;
         |  required int32 src_gen;
@@ -891,7 +828,7 @@ object CorpusStore {
         st.entries.map(e =>
           Seq(b, e.srcGen, e.isDelta, e.isTombstone, e.nRows, st.live))
       })
-    writeTinyParquet(spark, s"$path/meta/gen=$gen",
+    TinyParquet.write(spark, s"$path/meta/gen=$gen",
       """message spark_schema {
         |  required int32 gen;
         |  required int64 n_rows;
@@ -901,7 +838,7 @@ object CorpusStore {
     val manifestStamp = stampWriterToken(spark, s"$path/manifest/gen=$gen")
     val metaStamp = stampWriterToken(spark, s"$path/meta/gen=$gen")
     verifyWriterTokens(spark, dataStamps :+ manifestStamp :+ metaStamp)
-    commitCurrent(spark, path, gen, base)
+    GenPointer.commit(spark, path, gen, base)
     gen
   }
 
@@ -936,35 +873,35 @@ object CorpusStore {
         "the batch to the stored types first")
   }
 
-  /** Initialize a copy-on-write store (or commit a FULL rewrite of an
-    * existing one — every bucket owned by the new generation, e.g.
-    * after a corpus-wide refilter). `idCol`/`numBuckets` fix the
-    * store's bucketing at init; a rewrite must pass the same values
-    * (use [[rebucketCorpusCow]] to change the count). Returns the
+  /** Initialize a copy-on-write store, or commit a FULL snapshot of
+    * an existing one: a base-only generation that owns every bucket
+    * (e.g. after a corpus-wide refilter; the frame may read the
+    * store's own CURRENT — it lands under a generation-private
+    * directory). `idCol`/`numBuckets` fix the store's bucketing at
+    * init; a rewrite must pass the same values (use
+    * [[rebucketCorpusCow]] to change the count). Returns the
     * committed generation.
     */
   def writeCorpusCow(df: DataFrame, path: String, idCol: String,
                      numBuckets: Int = 256): Int = {
     val spark = df.sparkSession
-    import spark.implicits._
+    requireStore(spark, path, init = true)
     require(numBuckets >= 1, "writeCorpusCow: numBuckets must be >= 1")
     require(df.columns.contains(idCol),
       s"writeCorpusCow: frame has no column '$idCol'")
     val (gen, base) =
       if (GenPointer.exists(spark, path)) {
-        require(isCow(spark, path),
-          s"CorpusStore: $path is a full-materialization store — use " +
-            "writeCorpusSnapshot")
         val storedId = cowIdCol(spark, path)
         val storedN = effectiveNumBuckets(spark, path)
         require(storedId == idCol && storedN == numBuckets,
           s"writeCorpusCow: store at $path buckets by " +
             s"pmod(xxhash64($storedId), $storedN); got ($idCol, " +
             s"$numBuckets) — rebucketCorpusCow changes the count")
-        currentGen(spark, path) match { case (g, b) => (g + 1, b) }
+        pointer(spark, path) match { case (g, b) => (g + 1, b) }
       } else {
-        Seq((idCol, numBuckets)).toDF("id_col", "num_buckets")
-          .repartition(1).write.mode("overwrite").parquet(s"$path/cowmeta")
+        TinyParquet.write(spark, s"$path/cowmeta",
+          "message spark_schema { required binary id_col (STRING); }",
+          Seq(Seq(idCol)))
         (0, 0)
       }
     writeCowBase(df, path, gen, base, idCol, numBuckets)
@@ -1013,7 +950,7 @@ object CorpusStore {
       schema: org.apache.spark.sql.types.StructType,
       changeBuckets: Array[Int],
       merge: Option[DataFrame] => DataFrame): Int = {
-    val base = currentGen(spark, path)._2
+    val base = pointer(spark, path)._2
     val gen = g + 1
     val oldBuckets = manifest.filter(kv => changeBuckets.contains(kv._1))
     val old =
@@ -1113,8 +1050,7 @@ object CorpusStore {
     */
   def upsertIntoCorpusCow(df: DataFrame, path: String): Int = {
     val spark = df.sparkSession
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     val idCol = cowIdCol(spark, path)
     require(df.columns.contains(idCol),
       s"upsertIntoCorpusCow: frame has no column '$idCol'")
@@ -1130,9 +1066,7 @@ object CorpusStore {
   private def upsertPinned(changes: DataFrame, path: String,
       idCol: String, numBuckets: Int): Int = {
     val spark = changes.sparkSession
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
-    val g = currentGen(spark, path)._1
+    val g = pointer(spark, path)._1
     val manifest = readCowManifest(spark, path, g)
     val schema = storeRowSchemaAt(spark, path, g, manifest)
     requireChangeFrame(changes, idCol, schema, "upsertIntoCorpusCow")
@@ -1158,8 +1092,7 @@ object CorpusStore {
     */
   def deleteFromCorpusCow(ids: DataFrame, path: String): Int = {
     val spark = ids.sparkSession
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     val idCol = cowIdCol(spark, path)
     require(ids.columns.contains(idCol),
       s"deleteFromCorpusCow: frame has no column '$idCol'")
@@ -1170,7 +1103,7 @@ object CorpusStore {
     require(perBucket.nonEmpty, "deleteFromCorpusCow: empty takedown set")
     val delN = perBucket.values.sum
     val touched = perBucket.keys.toArray
-    val g = currentGen(spark, path)._1
+    val g = pointer(spark, path)._1
     val manifest = readCowManifest(spark, path, g)
     cowModify(spark, path, idCol, numBuckets, g, manifest,
       storeRowSchemaAt(spark, path, g, manifest), touched, {
@@ -1209,8 +1142,10 @@ object CorpusStore {
     * empty batch's tree is deleted and the call fails with "empty
     * change set", leaving no directory behind.
     */
-  def appendDeltaToCorpusCow(df: DataFrame, path: String): Int =
+  def appendDeltaToCorpusCow(df: DataFrame, path: String): Int = {
+    requireStore(df.sparkSession, path)
     appendDeltaPinned(df.localCheckpoint(), path)._1
+  }
 
   /** [[appendDeltaToCorpusCow]] over a frame the CALLER already
     * pinned with localCheckpoint — the ingest loop's path (round 19
@@ -1227,13 +1162,11 @@ object CorpusStore {
   private def appendDeltaPinned(changes: DataFrame,
       path: String): (Int, Long) = {
     val spark = changes.sparkSession
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
     val idCol = cowIdCol(spark, path)
     require(changes.columns.contains(idCol),
       s"appendDeltaToCorpusCow: frame has no column '$idCol'")
     val numBuckets = effectiveNumBuckets(spark, path)
-    val (g, base) = currentGen(spark, path)
+    val (g, base) = pointer(spark, path)
     val gen = g + 1
     val manifest = readCowManifest(spark, path, g)
     val schema = storeRowSchemaAt(spark, path, g, manifest)
@@ -1317,13 +1250,12 @@ object CorpusStore {
     */
   def appendTombstonesToCorpusCow(ids: DataFrame, path: String): Int = {
     val spark = ids.sparkSession
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     val idCol = cowIdCol(spark, path)
     require(ids.columns.contains(idCol),
       s"appendTombstonesToCorpusCow: frame has no column '$idCol'")
     val numBuckets = effectiveNumBuckets(spark, path)
-    val (g, base) = currentGen(spark, path)
+    val (g, base) = pointer(spark, path)
     val gen = g + 1
     val manifest = readCowManifest(spark, path, g)
     val idField = storeRowSchemaAt(spark, path, g, manifest)(idCol)
@@ -1381,11 +1313,10 @@ object CorpusStore {
     * delta-carrying buckets.
     */
   def compactCorpusCow(spark: SparkSession, path: String): Int = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     val idCol = cowIdCol(spark, path)
     val numBuckets = effectiveNumBuckets(spark, path)
-    val (g, base) = currentGen(spark, path)
+    val (g, base) = pointer(spark, path)
     val manifest = readCowManifest(spark, path, g)
     val deltaful = manifest.filter(_._2.entries.exists(_.isDelta))
     if (deltaful.isEmpty) return g
@@ -1440,12 +1371,11 @@ object CorpusStore {
     */
   def rebucketCorpusCow(spark: SparkSession, path: String,
                         newNumBuckets: Int): Int = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     require(newNumBuckets >= 1,
       "rebucketCorpusCow: newNumBuckets must be >= 1")
     val idCol = cowIdCol(spark, path)
-    val (g, base) = currentGen(spark, path)
+    val (g, base) = pointer(spark, path)
     writeCowBase(readCorpusSnapshotAt(spark, path, g), path,
       g + 1, base, idCol, newNumBuckets)
   }
@@ -1496,8 +1426,9 @@ object CorpusStore {
                      compactAfterDeltas: Int = 8)
                     (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    requireStore(spark, path)
     val logPath = s"$path/ingest_log"
-    if (ingestLogContains(spark, logPath, batchId)) return
+    if (BatchLog.contains(spark, logPath, batchId)) return
     // eager checkpoint: the upsert reads store paths it then mutates;
     // the streaming source's batch must also be pinned before reuse.
     // The pinned write variants skip the public methods' second
@@ -1520,91 +1451,6 @@ object CorpusStore {
         maintainCorpusCow(spark, path, maxGenerations, compactAfterDeltas)
     }
   }
-
-  /** Whether an ingest log records `batchId`. "No log yet" is an
-    * explicit existence check, NOT a swallowed read error (round-15
-    * review finding): a corrupted log would otherwise silently
-    * downgrade exactly-once to replay-everything forever —
-    * corruption must surface loudly instead. Shared by
-    * [[cowIngestBatch]] and [[graft.operators.Ingest]].
-    *
-    * Round 17 (r16 verdict task 1 — the last O(batches)-per-trigger
-    * cost in the streaming ingest path): the check consults, in
-    * order,
-    *  1. the WATERMARK — the max-contiguous-from-0 batch id recorded
-    *     at the last log compaction (one raw pointer read; Spark's
-    *     micro-batch ids are contiguous from 0 per checkpoint, so a
-    *     restart's replayed id almost always resolves here);
-    *  2. the COMPACT file — the whole logged history folded into ONE
-    *     sorted parquet file by [[compactIngestLog]], so the probe is
-    *     a single-file scan with batch_id min/max + predicate
-    *     pushdown;
-    *  3. the TAIL — `logPath` itself, one small file per batch logged
-    *     SINCE the last compaction (bounded by the maintenance
-    *     cadence, never by the stream's lifetime).
-    */
-  private[graft] def ingestLogContains(spark: SparkSession,
-      logPath: String, batchId: Long): Boolean =
-    BatchLog.contains(spark, logPath, batchId)
-
-  /** The committed compact-log parquet file for `logPath` — resolved
-    * by the shared [[BatchLog]] module since round 18 (the fold's
-    * machinery generalized out of this object so the serving loops'
-    * `serve_log` shares it; r17 verdict task 2).
-    */
-
-  /** The max-contiguous-from-0 batch id as of the last compaction, if
-    * one was recorded — a raw pointer read ([[GenPointer]] format).
-    */
-  private[graft] def ingestLogWatermark(spark: SparkSession,
-      logPath: String): Option[Long] =
-    BatchLog.watermark(spark, logPath)
-
-  /** The tail's physical parquet files (what grows one file per
-    * logged batch between compactions) — filesystem listing only.
-    */
-  private[graft] def ingestLogTailFiles(spark: SparkSession,
-      logPath: String): Seq[String] =
-    BatchLog.tailFiles(spark, logPath)
-
-  /** Fold the whole logged history — previous compact file plus every
-    * tail file — into ONE sorted parquet file, record the
-    * max-contiguous batch-id watermark, and delete the folded tail
-    * (round 17 — r16 verdict task 1). Before this, `appendIngestLog`'s
-    * one-file-per-batch tail was listed and footer-read on EVERY
-    * trigger: an O(batches) per-trigger metadata cost that grows
-    * without bound — 100k micro-batches is 100k tiny files on object
-    * storage, the same small-files disease `Layout.compact` cures for
-    * data. After it, the replay check is a pointer read (watermark)
-    * plus at most one single-file scan plus the since-compaction tail.
-    *
-    * Crash-safe by the same ordering every commit in this module
-    * uses, with the fold's writer token verified immediately before
-    * the swap:
-    *  1. the folded file materializes in a generation-private
-    *     `<logPath>_compact/gen=<k+1>` directory no reader resolves;
-    *  2. one atomic [[GenPointer]] rename publishes it — a crash
-    *     before this leaves the old compact file + full tail
-    *     readable;
-    *  3. the watermark pointer commits (conservative: computed from
-    *     exactly the ids the folded file holds);
-    *  4. the SNAPSHOTTED tail files are deleted — a file appended by
-    *     a concurrent trigger after the snapshot survives, and a
-    *     crash mid-delete leaves duplicates the contains-check (a
-    *     pure existence probe) never notices and the next fold
-    *     dedups away.
-    *
-    * Idempotent and convergent from any crash state. Returns the
-    * number of tail files folded.
-    */
-  private[graft] def compactIngestLog(spark: SparkSession,
-      logPath: String): Int =
-    // the normalize projection reconciles the pre-round-16 mixed
-    // writer schemas into the shared (batch_id, gen, n_admitted) row
-    BatchLog.compact(spark, logPath, df =>
-      df.select(col("batch_id").cast("long").as("batch_id"),
-        col("gen").cast("int").as("gen"),
-        col("n_admitted").cast("long").as("n_admitted")))
 
   /** Append one ingest-log row — ONE schema for every writer
     * (round 16 — verdict task 3 / ADVICE): [[cowIngestBatch]] and
@@ -1636,8 +1482,7 @@ object CorpusStore {
     */
   private[graft] def cowKey(spark: SparkSession,
                             path: String): (String, Int) = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     (cowIdCol(spark, path), effectiveNumBuckets(spark, path))
   }
 
@@ -1672,9 +1517,8 @@ object CorpusStore {
     */
   def corpusChangesSince(spark: SparkSession, path: String,
                          fromGen: Int, toGen: Int): DataFrame = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
-    val (g, b) = currentGen(spark, path)
+    requireStore(spark, path)
+    val (g, b) = pointer(spark, path)
     require(toGen >= b && toGen <= g,
       s"CorpusStore: generation $toGen is not retained at $path " +
         s"(committed $g, oldest retained $b)")
@@ -1710,11 +1554,10 @@ object CorpusStore {
     */
   def followCorpus(spark: SparkSession, path: String, consumer: String)
                   (body: DataFrame => Unit): Option[(Int, Int)] = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     require(consumer.nonEmpty && !consumer.contains("/"),
       s"followCorpus: '$consumer' is not a valid consumer name")
-    val (cur, _) = currentGen(spark, path)
+    val (cur, _) = pointer(spark, path)
     val offPath = s"$path/followers/$consumer"
     val from =
       if (GenPointer.exists(spark, offPath))
@@ -1735,6 +1578,7 @@ object CorpusStore {
     */
   def listCorpusFollowers(spark: SparkSession,
       path: String): Seq[(String, Int)] = {
+    requireStore(spark, path)
     val f = fs(spark, path)
     val root = new org.apache.hadoop.fs.Path(s"$path/followers")
     if (!f.exists(root)) Nil
@@ -1755,6 +1599,7 @@ object CorpusStore {
     */
   def unregisterFollower(spark: SparkSession, path: String,
       consumer: String): Boolean = {
+    requireStore(spark, path)
     require(consumer.nonEmpty && !consumer.contains("/"),
       s"unregisterFollower: '$consumer' is not a valid consumer name")
     val f = fs(spark, path)
@@ -1768,9 +1613,8 @@ object CorpusStore {
     */
   def corpusSchema(spark: SparkSession,
       path: String): org.apache.spark.sql.types.StructType = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
-    val g = currentGen(spark, path)._1
+    requireStore(spark, path)
+    val g = pointer(spark, path)._1
     storeRowSchemaAt(spark, path, g, readCowManifest(spark, path, g))
   }
 
@@ -1782,12 +1626,11 @@ object CorpusStore {
     * `spark.readStream.format("graft-corpus").option("path", p).load()`.
     */
   def readCorpusStream(spark: SparkSession, path: String): DataFrame = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     spark.readStream.format("graft-corpus").option("path", path).load()
   }
 
-  // ——— Reads (both layouts) —————————————————————————————————————————
+  // ——— Reads ————————————————————————————————————————————————————————
 
   /** The committed corpus version — resolves CURRENT once, then reads
     * the explicit generation path(s) (no glob over other generations,
@@ -1799,9 +1642,9 @@ object CorpusStore {
   /** Time-travel read of a specific retained generation. Fails fast
     * outside [base, CURRENT] — below base the data was vacuumed,
     * above CURRENT it was never committed (a crashed writer's orphan
-    * directory must not be readable as if it were a version). Under
-    * COW the read unions exactly the generation's manifest-referenced
-    * trees — a bounded path list, still resolved once — merging
+    * directory must not be readable as if it were a version). The
+    * read covers exactly the generation's manifest-referenced trees
+    * — a bounded path list, still resolved once — merging
     * last-writer-wins where the manifest carries deltas.
     */
   def readCorpusSnapshotAt(spark: SparkSession, path: String,
@@ -1810,21 +1653,18 @@ object CorpusStore {
     require(gen >= b && gen <= g,
       s"CorpusStore: generation $gen is not retained at $path " +
         s"(committed $g, oldest retained $b)")
-    if (isCow(spark, path)) {
-      val manifest = readCowManifest(spark, path, gen)
-      require(manifest.nonEmpty,
-        s"CorpusStore: generation $gen at $path holds no rows")
-      readCowView(spark, path, cowIdCol(spark, path), manifest, gen,
-        storeRowSchemaAt(spark, path, gen, manifest))
-    } else spark.read.parquet(s"$path/snapshots/gen=$gen")
+    val manifest = readCowManifest(spark, path, gen)
+    require(manifest.nonEmpty,
+      s"CorpusStore: generation $gen at $path holds no rows")
+    readCowView(spark, path, cowIdCol(spark, path), manifest, gen,
+      storeRowSchemaAt(spark, path, gen, manifest))
   }
 
-  /** (gen, n_rows) per retained version, from the 1-row manifests —
+  /** (gen, n_rows) per retained version, from the 1-row metas —
     * never scans snapshot data. The meta rows are read on the driver
     * ([[TinyParquet.readGroups]]) and returned as a local frame
     * ordered by gen, so listing starts no Spark job however many
-    * generations are retained. Projected to the two columns every
-    * meta version carries, so mixed meta vintages list cleanly.
+    * generations are retained.
     */
   def listCorpusSnapshots(spark: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
@@ -1842,15 +1682,16 @@ object CorpusStore {
 
   /** Between-version review: [[graft.operators.Dedup.snapshotDiff]]
     * (per id: added / removed / changed / unchanged) from generation
-    * `genFrom` to `genTo`. Both must be retained. Works identically
-    * across COW generations (the reads resolve through manifests).
+    * `genFrom` to `genTo`. Both must be retained.
     */
   def snapshotDelta(spark: SparkSession, path: String,
                     genFrom: Int, genTo: Int,
-                    idCol: String, textCol: String): DataFrame =
+                    idCol: String, textCol: String): DataFrame = {
+    requireStore(spark, path)
     Dedup.snapshotDiff(
       readCorpusSnapshotAt(spark, path, genFrom),
       readCorpusSnapshotAt(spark, path, genTo), idCol, textCol)
+  }
 
   /** Trim time-travel history to the newest `keepLast` generations.
     * Ordering is the crash-safety contract: the new base commits in
@@ -1863,7 +1704,7 @@ object CorpusStore {
     * retention only past your longest reader, the same contract every
     * table-format vacuum carries.
     *
-    * Under COW the physical delete is REFERENCE-COUNTED over BOTH
+    * The physical delete is REFERENCE-COUNTED over BOTH
     * tree kinds: a vacuumed generation's manifest and meta go, but
     * each of its base AND delta trees survives while ANY retained
     * generation's manifest still points at it — sharing never breaks
@@ -1888,8 +1729,9 @@ object CorpusStore {
 
   def vacuumCorpusSnapshots(spark: SparkSession, path: String,
                             keepLast: Int): VacuumReport = {
+    requireStore(spark, path)
     require(keepLast >= 1, "vacuumCorpusSnapshots: keepLast must be >= 1")
-    val (g, b) = currentGen(spark, path)
+    val (g, b) = pointer(spark, path)
     val requested = math.max(b, g - keepLast + 1)
     // the binding follower: the smallest acked offset whose f+1 sits
     // below the requested base (ties broken by name for determinism)
@@ -1898,60 +1740,54 @@ object CorpusStore {
       .sortBy { case (c, f) => (f, c) }.headOption
     val newBase = binding
       .map { case (_, f) => math.max(b, f + 1) }.getOrElse(requested)
-    if (newBase != b) commitCurrent(spark, path, g, newBase)
+    if (newBase != b) GenPointer.commit(spark, path, g, newBase)
     val f = fs(spark, path)
     def rm(dir: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir)
       if (f.exists(p)) f.delete(p, true)
     }
-    if (isCow(spark, path)) {
-      // every (kind, src_gen, bucket) a RETAINED manifest references
-      // must survive — collected before any delete, bounded by
-      // (retained gens) × num_buckets × chain length
-      val referenced = (newBase to g).flatMap(i =>
-        readCowManifest(spark, path, i).toSeq.flatMap { case (bk, st) =>
-          st.entries.map(e => (e.isDelta, e.srcGen, bk))
-        }).toSet
-      def sweepRoot(root: String, isDelta: Boolean, gens: Seq[Int]): Unit =
-        gens.foreach { i =>
-          if (exists(spark, s"$path/$root/gen=$i")) {
-            val buckets = cowBucketsOnDisk(spark, path, root, i)
-            buckets.filterNot(bk => referenced((isDelta, i, bk)))
-              .foreach(bk => rm(s"$path/$root/gen=$i/_cs_bucket=$bk"))
-            if (buckets.forall(bk => !referenced((isDelta, i, bk))))
-              rm(s"$path/$root/gen=$i")
-          }
+    // every (kind, src_gen, bucket) a RETAINED manifest references
+    // must survive — collected before any delete, bounded by
+    // (retained gens) × num_buckets × chain length
+    val referenced = (newBase to g).flatMap(i =>
+      readCowManifest(spark, path, i).toSeq.flatMap { case (bk, st) =>
+        st.entries.map(e => (e.isDelta, e.srcGen, bk))
+      }).toSet
+    def sweepRoot(root: String, isDelta: Boolean, gens: Seq[Int]): Unit =
+      gens.foreach { i =>
+        if (exists(spark, s"$path/$root/gen=$i")) {
+          val buckets = cowBucketsOnDisk(spark, path, root, i)
+          buckets.filterNot(bk => referenced((isDelta, i, bk)))
+            .foreach(bk => rm(s"$path/$root/gen=$i/_cs_bucket=$bk"))
+          if (buckets.forall(bk => !referenced((isDelta, i, bk))))
+            rm(s"$path/$root/gen=$i")
         }
-      sweepRoot("parts", isDelta = false, 0 until newBase)
-      sweepRoot("deltas", isDelta = true, 0 until newBase)
-      (0 until newBase).foreach { i =>
+      }
+    sweepRoot("parts", isDelta = false, 0 until newBase)
+    sweepRoot("deltas", isDelta = true, 0 until newBase)
+    (0 until newBase).foreach { i =>
+      rm(s"$path/manifest/gen=$i")
+      rm(s"$path/meta/gen=$i")
+    }
+    // ABOVE-current orphans (crashed/abandoned writers): gens
+    // STRICTLY past g+1 can never be resolved by a reader and can
+    // never be an in-flight writer's work-in-progress either — an
+    // in-flight writer materializes exactly g+1 (it read CURRENT=g)
+    // and its own overwrite truncates that one on retry. g+1 itself
+    // is left alone for that reason.
+    Seq("parts", "deltas").foreach { root =>
+      cowGenDirsOnDisk(spark, path, root).filter(_ > g + 1).foreach { i =>
+        rm(s"$path/$root/gen=$i")
         rm(s"$path/manifest/gen=$i")
         rm(s"$path/meta/gen=$i")
       }
-      // ABOVE-current orphans (crashed/abandoned writers): gens
-      // STRICTLY past g+1 can never be resolved by a reader and can
-      // never be an in-flight writer's work-in-progress either — an
-      // in-flight writer materializes exactly g+1 (it read CURRENT=g)
-      // and its own overwrite truncates that one on retry. g+1 itself
-      // is left alone for that reason.
-      Seq("parts", "deltas").foreach { root =>
-        cowGenDirsOnDisk(spark, path, root).filter(_ > g + 1).foreach { i =>
-          rm(s"$path/$root/gen=$i")
-          rm(s"$path/manifest/gen=$i")
-          rm(s"$path/meta/gen=$i")
-        }
-      }
-      // schema records BELOW base stay — a retained generation's epoch
-      // may predate base (trees shared across the vacuum line resolve
-      // their shape through it); above-CURRENT+1 orphans go with the
-      // rest of a crashed writer's leavings
-      schemaGensOnDisk(spark, path).filter(_ > g + 1)
-        .foreach(i => rm(s"$path/schemas/gen=$i"))
-    } else {
-      (0 until newBase).foreach { i =>
-        Seq("snapshots", "meta").foreach(d => rm(s"$path/$d/gen=$i"))
-      }
     }
+    // schema records BELOW base stay — a retained generation's epoch
+    // may predate base (trees shared across the vacuum line resolve
+    // their shape through it); above-CURRENT+1 orphans go with the
+    // rest of a crashed writer's leavings
+    schemaGensOnDisk(spark, path).filter(_ > g + 1)
+      .foreach(i => rm(s"$path/schemas/gen=$i"))
     VacuumReport(requested, newBase, binding)
   }
 
@@ -2021,7 +1857,7 @@ object CorpusStore {
     *    `maxGenerations`. [[vacuumCorpusSnapshots]] clears both;
     *  - `ingestLogTail` / `needsLogCompaction` (round 17): the replay
     *    guard's one-file-per-batch tail since the last log fold —
-    *    the per-trigger metadata cost [[compactIngestLog]] resets;
+    *    the per-trigger metadata cost [[BatchLog.compact]] resets;
     *    the flag flips once the combined compact+tail file count
     *    exceeds one, so a maintained store's replay check stays a
     *    pointer read plus at most one single-file scan.
@@ -2039,10 +1875,9 @@ object CorpusStore {
   def cowHealthReport(spark: SparkSession, path: String,
                       maxGenerations: Int = 16,
                       compactAfterDeltas: Int = 8): CowHealth = {
-    require(isCow(spark, path),
-      s"CorpusStore: $path is not a copy-on-write store")
+    requireStore(spark, path)
     val numBuckets = effectiveNumBuckets(spark, path)
-    val (g, b) = currentGen(spark, path)
+    val (g, b) = pointer(spark, path)
     val cur = readCowManifest(spark, path, g)
     val total = cur.values.map(_.live).sum
     // a bucket can sit in the manifest with live = 0 (emptied by
@@ -2071,7 +1906,7 @@ object CorpusStore {
     val orphanBytes = orphans.map { dir =>
       f.getContentSummary(new org.apache.hadoop.fs.Path(dir)).getLength
     }.sum
-    val logTail = ingestLogTailFiles(spark, s"$path/ingest_log").size
+    val logTail = BatchLog.tailFiles(spark, s"$path/ingest_log").size
     val logHasCompact =
       BatchLog.hasCompact(spark, s"$path/ingest_log")
     CowHealth(
@@ -2122,6 +1957,7 @@ object CorpusStore {
   def maintainCorpusCow(spark: SparkSession, path: String,
       maxGenerations: Int = 16,
       compactAfterDeltas: Int = 8): CowMaintainResult = {
+    requireStore(spark, path)
     val before = cowHealthReport(spark, path, maxGenerations,
       compactAfterDeltas)
     val actions = Seq.newBuilder[String]
@@ -2131,7 +1967,7 @@ object CorpusStore {
     }
     // re-check retention AFTER the compaction generation (health's
     // needsVacuum saw the pre-compaction count)
-    val (g, b) = currentGen(spark, path)
+    val (g, b) = pointer(spark, path)
     if (before.needsVacuum || (g - b + 1) > maxGenerations) {
       val r = vacuumCorpusSnapshots(spark, path, keepLast = maxGenerations)
       actions += "vacuumed"
@@ -2146,7 +1982,7 @@ object CorpusStore {
     // per-trigger cost): content-neutral, crash-convergent, so the
     // maintenance loop is the right cadence for it
     if (before.needsLogCompaction) {
-      compactIngestLog(spark, s"$path/ingest_log")
+      BatchLog.compact(spark, s"$path/ingest_log")
       actions += "log_compacted"
     }
     val done = actions.result()

@@ -105,8 +105,7 @@ class CorpusStreamProvider extends StreamSourceProvider
       parameters: Map[String, String]): (String, StructType) = {
     val spark = sqlContext.sparkSession
     val path = pathOf(parameters)
-    require(CorpusStore.isCow(spark, path),
-      s"graft-corpus source: $path is not a copy-on-write corpus store")
+    CorpusStore.requireStore(spark, path)
     require(schema.isEmpty,
       "graft-corpus source: the schema is the store's row schema — " +
         "don't pass one")

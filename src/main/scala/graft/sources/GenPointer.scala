@@ -28,11 +28,9 @@ import org.apache.spark.sql.SparkSession
   * them validates the NEW bytes against the OLD checksum and throws
   * "Checksum error: …/CURRENT". The pointer file therefore bypasses
   * the checksum layer entirely — created and opened through the RAW
-  * filesystem (no sidecar written, none validated; [[commit]] also
-  * removes any sidecar a pre-fix writer left, so migrated stores
-  * stop tripping too). Atomicity still comes from the single data-
-  * file rename; integrity of a tens-of-bytes pointer is the rename's
-  * to give, not a CRC's. Non-checksummed filesystems (HDFS, object
+  * filesystem (no sidecar written, none validated). Atomicity still
+  * comes from the single data-file rename; integrity of a
+  * tens-of-bytes pointer is the rename's to give, not a CRC's. Non-checksummed filesystems (HDFS, object
   * stores) are unaffected — raw IS the filesystem there.
   */
 object GenPointer {
@@ -83,13 +81,6 @@ object GenPointer {
     val f = fs(spark, path)
     val dst = new org.apache.hadoop.fs.Path(s"$path/CURRENT")
     val tmp = new org.apache.hadoop.fs.Path(s"$path/CURRENT.tmp")
-    // migration: a pre-fix writer's checksum sidecars would make a
-    // checksummed reader validate fresh bytes against stale CRCs —
-    // remove them once here (no-ops on raw/remote filesystems)
-    Seq(s"$path/.CURRENT.crc", s"$path/.CURRENT.tmp.crc").foreach { c =>
-      val p = new org.apache.hadoop.fs.Path(c)
-      if (f.exists(p)) f.delete(p, false)
-    }
     val out = f.create(tmp, true)
     val text = if (base == 0) gen.toString else s"$gen $base"
     try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))

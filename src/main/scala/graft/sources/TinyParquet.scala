@@ -16,12 +16,11 @@ import org.apache.spark.sql.SparkSession
   * Layout parity is the contract: [[write]] produces what
   * `Seq(tuples).toDF(...).repartition(1).write.parquet` produced —
   * one `part-*.snappy.parquet` plus a `_SUCCESS` marker, physical
-  * schema DECLARED by the caller (required int32/int64/boolean
+  * schema DECLARED by the caller (required int32/int64/boolean/string
   * fields, same names, same order) — so Spark readers and existing
   * stores interoperate in both directions; [[readGroups]] reads any
   * Spark-written file of these shapes (dictionary pages, optional
-  * fields, v1/v2 column sets) because each file is decoded under
-  * its own footer schema.
+  * fields) because each file is decoded under its own footer schema.
   *
   * FOOTER helpers answer the two questions a COW store used to ask of
   * its own data trees through Spark jobs: a tree's Spark schema
@@ -127,6 +126,7 @@ private[graft] object TinyParquet {
           case (PrimitiveTypeName.INT64, n: Int) => g.add(i, n.toLong)
           case (PrimitiveTypeName.INT64, n: Long) => g.add(i, n)
           case (PrimitiveTypeName.BOOLEAN, b: Boolean) => g.add(i, b)
+          case (PrimitiveTypeName.BINARY, t: String) => g.add(i, t)
           case (t, x) => throw new IllegalArgumentException(
             s"TinyParquet.write: value $x does not fit field $i ($t)")
         }

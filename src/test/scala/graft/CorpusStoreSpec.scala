@@ -31,11 +31,11 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("write → read round-trips; versions accumulate; list reads manifests only") {
     val path = tmp("graft-cs")
-    assert(CorpusStore.writeCorpusSnapshot(v0, path) == 0)
+    assert(CorpusStore.writeCorpusCow(v0, path, "doc_id", 8) == 0)
     assert(CorpusStore.readCorpusSnapshot(spark, path)
       .orderBy("doc_id").collect().toSeq ==
       v0.orderBy("doc_id").collect().toSeq)
-    assert(CorpusStore.writeCorpusSnapshot(v1, path) == 1)
+    assert(CorpusStore.writeCorpusCow(v1, path, "doc_id", 8) == 1)
     assert(CorpusStore.currentGen(spark, path) == ((1, 0)))
     // CURRENT reads v1; time travel reads v0 bit-identically
     assert(CorpusStore.readCorpusSnapshot(spark, path)
@@ -51,11 +51,11 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("concurrent reader resolved before a swap keeps its version; fresh reads see the new one") {
     val path = tmp("graft-cs-swap")
-    CorpusStore.writeCorpusSnapshot(v0, path)
+    CorpusStore.writeCorpusCow(v0, path, "doc_id", 8)
     // resolve a reader against CURRENT (gen 0) BEFORE the swap — this
     // is the DataFrame a long-running job would be scanning
     val reader = CorpusStore.readCorpusSnapshot(spark, path)
-    CorpusStore.writeCorpusSnapshot(v1, path)
+    CorpusStore.writeCorpusCow(v1, path, "doc_id", 8)
     // the pre-swap reader still sees gen 0, bit-identically
     assert(reader.orderBy("doc_id").collect().toSeq ==
       v0.orderBy("doc_id").collect().toSeq)
@@ -108,10 +108,10 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("read-modify-write: next version derives from CURRENT without self-overwrite") {
     val path = tmp("graft-cs-rmw")
-    CorpusStore.writeCorpusSnapshot(v0, path)
+    CorpusStore.writeCorpusCow(v0, path, "doc_id", 8)
     val cur = CorpusStore.readCorpusSnapshot(spark, path)
-    val gen = CorpusStore.writeCorpusSnapshot(
-      cur.where(col("doc_id") =!= 3L), path)
+    val gen = CorpusStore.writeCorpusCow(
+      cur.where(col("doc_id") =!= 3L), path, "doc_id", 8)
     assert(gen == 1)
     assert(CorpusStore.readCorpusSnapshot(spark, path)
       .select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
@@ -121,8 +121,8 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("snapshotDelta matches Dedup.snapshotDiff and reports add/remove/change") {
     val path = tmp("graft-cs-delta")
-    CorpusStore.writeCorpusSnapshot(v0, path)
-    CorpusStore.writeCorpusSnapshot(v1, path)
+    CorpusStore.writeCorpusCow(v0, path, "doc_id", 8)
+    CorpusStore.writeCorpusCow(v1, path, "doc_id", 8)
     val delta = CorpusStore
       .snapshotDelta(spark, path, 0, 1, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
@@ -135,14 +135,14 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("vacuum moves base atomically before deleting; below-base reads fail fast; idempotent") {
     val path = tmp("graft-cs-vac")
-    CorpusStore.writeCorpusSnapshot(v0, path)
-    CorpusStore.writeCorpusSnapshot(v1, path)
-    CorpusStore.writeCorpusSnapshot(
-      v1.withColumn("text", upper(col("text"))), path)
+    CorpusStore.writeCorpusCow(v0, path, "doc_id", 8)
+    CorpusStore.writeCorpusCow(v1, path, "doc_id", 8)
+    CorpusStore.writeCorpusCow(
+      v1.withColumn("text", upper(col("text"))), path, "doc_id", 8)
     CorpusStore.vacuumCorpusSnapshots(spark, path, keepLast = 2)
     assert(CorpusStore.currentGen(spark, path) == ((2, 1)))
     // gen 0 data and manifest are gone; reads of it fail fast
-    assert(!new java.io.File(s"$path/snapshots/gen=0").exists)
+    assert(!new java.io.File(s"$path/parts/gen=0").exists)
     val e = intercept[IllegalArgumentException] {
       CorpusStore.readCorpusSnapshotAt(spark, path, 0)
     }
@@ -158,10 +158,10 @@ class CorpusStoreSpec extends SparkSpec {
 
   test("a crashed writer's orphan generation is invisible until its commit lands") {
     val path = tmp("graft-cs-crash")
-    CorpusStore.writeCorpusSnapshot(v0, path)
+    CorpusStore.writeCorpusCow(v0, path, "doc_id", 8)
     // simulate a writer that materialized gen 1 but died before the
     // CURRENT rename: data exists, pointer still says 0
-    v1.write.mode("overwrite").parquet(s"$path/snapshots/gen=1")
+    v1.write.mode("overwrite").parquet(s"$path/parts/gen=1")
     assert(CorpusStore.currentGen(spark, path) == ((0, 0)))
     assert(CorpusStore.readCorpusSnapshot(spark, path).count() == 3)
     val e = intercept[IllegalArgumentException] {
@@ -169,7 +169,7 @@ class CorpusStoreSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("not retained"))
     // the retried write overwrites the orphan and commits exactly once
-    assert(CorpusStore.writeCorpusSnapshot(v1, path) == 1)
+    assert(CorpusStore.writeCorpusCow(v1, path, "doc_id", 8) == 1)
     assert(CorpusStore.readCorpusSnapshot(spark, path)
       .orderBy("doc_id").collect().toSeq ==
       v1.orderBy("doc_id").collect().toSeq)
@@ -404,23 +404,17 @@ class CorpusStoreSpec extends SparkSpec {
     assert(CorpusStore.currentGen(spark, path)._1 == 3)
   }
 
-  test("cow: layout guards — full and cow stores refuse each other's writers; bucketing is pinned at init") {
+  test("cow: layout guards — a non-store refuses the cow writers; bucketing is pinned at init") {
     val cow = tmp("graft-cs-cowg")
     CorpusStore.writeCorpusCow(cowCorpus, cow, "doc_id", cowBuckets)
-    val full = tmp("graft-cs-fullg")
-    CorpusStore.writeCorpusSnapshot(v0, full)
+    val plain = tmp("graft-cs-plaing")
+    v0.write.mode("overwrite").parquet(plain)
     assert(intercept[IllegalArgumentException] {
-      CorpusStore.writeCorpusSnapshot(v0, cow)
-    }.getMessage.contains("copy-on-write"))
-    assert(intercept[IllegalArgumentException] {
-      CorpusStore.upsertIntoCorpusCow(v0, full)
+      CorpusStore.upsertIntoCorpusCow(v0, plain)
     }.getMessage.contains("not a copy-on-write"))
     assert(intercept[IllegalArgumentException] {
-      CorpusStore.deleteFromCorpusCow(v0.select("doc_id"), full)
+      CorpusStore.deleteFromCorpusCow(v0.select("doc_id"), plain)
     }.getMessage.contains("not a copy-on-write"))
-    assert(intercept[IllegalArgumentException] {
-      CorpusStore.writeCorpusCow(v0, full, "doc_id", cowBuckets)
-    }.getMessage.contains("full-materialization"))
     // the bucketing is the sharing contract — a rewrite must match it
     assert(intercept[IllegalArgumentException] {
       CorpusStore.writeCorpusCow(cowCorpus, cow, "doc_id", cowBuckets + 1)
@@ -431,5 +425,76 @@ class CorpusStoreSpec extends SparkSpec {
     assert(bucketDirs(cow, 1) == bucketsOf(1L to 40L))
     assert(rows(CorpusStore.readCorpusSnapshot(spark, cow)) ==
       rows(cowCorpus))
+  }
+
+  test("every public entry point refuses a BM25 index and a plain parquet directory with the one guard message, mutating neither") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import graft.operators.Retrieval
+    // a BM25 index past its first append carries CURRENT "1": a
+    // vacuum that took it for a store would rewrite it to "1 1" and
+    // drop generation 0's postings from every later probe
+    val bm25 = tmp("graft-cs-guard-bm25")
+    Retrieval.writeBm25Index(v0, "doc_id", "text", bm25, numBuckets = 4)
+    Retrieval.appendToBm25Index(
+      Seq((9L, "omega psi chi")).toDF("doc_id", "text"), "doc_id", "text",
+      bm25)
+    val plain = tmp("graft-cs-guard-plain")
+    v0.write.mode("overwrite").parquet(plain)
+    def files(dir: String): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(root.relativize(_).toString)
+        .toSeq.sorted
+      finally walk.close()
+    }
+    val bm25Current = java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(bm25, "CURRENT")).toSeq
+    val before = Map(bm25 -> files(bm25), plain -> files(plain))
+    val entryPoints: Seq[(String, String => Any)] = Seq(
+      "currentGen" -> (p => CorpusStore.currentGen(spark, p)),
+      "readCorpusSnapshot" -> (p => CorpusStore.readCorpusSnapshot(spark, p)),
+      "readCorpusSnapshotAt" ->
+        (p => CorpusStore.readCorpusSnapshotAt(spark, p, 0)),
+      "listCorpusSnapshots" -> (p => CorpusStore.listCorpusSnapshots(spark, p)),
+      "snapshotDelta" ->
+        (p => CorpusStore.snapshotDelta(spark, p, 0, 1, "doc_id", "text")),
+      "vacuumCorpusSnapshots" ->
+        (p => CorpusStore.vacuumCorpusSnapshots(spark, p, keepLast = 1)),
+      "writeCorpusCow" -> (p => CorpusStore.writeCorpusCow(v0, p, "doc_id", 8)),
+      "upsertIntoCorpusCow" -> (p => CorpusStore.upsertIntoCorpusCow(v0, p)),
+      "deleteFromCorpusCow" ->
+        (p => CorpusStore.deleteFromCorpusCow(v0.select("doc_id"), p)),
+      "appendDeltaToCorpusCow" ->
+        (p => CorpusStore.appendDeltaToCorpusCow(v0, p)),
+      "appendTombstonesToCorpusCow" ->
+        (p => CorpusStore.appendTombstonesToCorpusCow(v0.select("doc_id"), p)),
+      "compactCorpusCow" -> (p => CorpusStore.compactCorpusCow(spark, p)),
+      "rebucketCorpusCow" -> (p => CorpusStore.rebucketCorpusCow(spark, p, 4)),
+      "evolveCorpusCowSchema" -> (p => CorpusStore.evolveCorpusCowSchema(
+        spark, p, StructType(Seq(StructField("lang", StringType))))),
+      "dropCorpusCowColumns" ->
+        (p => CorpusStore.dropCorpusCowColumns(spark, p, Seq("text"))),
+      "renameCorpusCowColumn" ->
+        (p => CorpusStore.renameCorpusCowColumn(spark, p, "text", "body")),
+      "cowIngestBatch" -> (p => CorpusStore.cowIngestBatch(p)(v0, 0L)),
+      "corpusChangesSince" ->
+        (p => CorpusStore.corpusChangesSince(spark, p, -1, 0)),
+      "followCorpus" -> (p => CorpusStore.followCorpus(spark, p, "c")(_ => ())),
+      "listCorpusFollowers" -> (p => CorpusStore.listCorpusFollowers(spark, p)),
+      "unregisterFollower" ->
+        (p => CorpusStore.unregisterFollower(spark, p, "c")),
+      "corpusSchema" -> (p => CorpusStore.corpusSchema(spark, p)),
+      "readCorpusStream" -> (p => CorpusStore.readCorpusStream(spark, p)),
+      "cowHealthReport" -> (p => CorpusStore.cowHealthReport(spark, p)),
+      "maintainCorpusCow" -> (p => CorpusStore.maintainCorpusCow(spark, p)))
+    for ((name, call) <- entryPoints; dir <- Seq(bm25, plain)) {
+      val e = intercept[IllegalArgumentException](call(dir))
+      assert(e.getMessage == s"requirement failed: CorpusStore: $dir is " +
+        "not a copy-on-write store", s"$name on $dir: ${e.getMessage}")
+    }
+    assert(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(bm25, "CURRENT")).toSeq == bm25Current)
+    assert(Map(bm25 -> files(bm25), plain -> files(plain)) == before)
   }
 }

@@ -501,27 +501,30 @@ class EdgeCaseSpec extends SparkSpec {
     assert(r._2 == n && r._3 == n.toDouble / (n + 10))
   }
 
-  test("CorpusStore: an empty snapshot round-trips schema-exact; over-long vacuum retention is a no-op") {
+  test("CorpusStore: an empty founding corpus is refused with no CURRENT left; over-long vacuum retention is a no-op") {
     import graft.sources.CorpusStore
     val path = java.nio.file.Files
       .createTempDirectory("graft-edge-cs").toString
-    // an empty recrawl result is still a legitimate corpus version —
-    // the store must version it, not choke on it
+    // a store holds at least one row in every generation: an empty
+    // founding corpus is refused and commits nothing
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    assert(CorpusStore.writeCorpusSnapshot(empty, path) == 0)
-    val back = CorpusStore.readCorpusSnapshot(spark, path)
-    assert(back.count() == 0)
-    assert(back.schema.fieldNames.toSeq == Seq("doc_id", "text"))
-    // delta from an empty founding version is pure additions
-    assert(CorpusStore.writeCorpusSnapshot(
-      Seq((1L, "alpha")).toDF("doc_id", "text"), path) == 1)
+    assert(intercept[IllegalArgumentException] {
+      CorpusStore.writeCorpusCow(empty, path, "doc_id", 8)
+    }.getMessage.contains("refusing an empty corpus"))
+    assert(!new java.io.File(s"$path/CURRENT").exists)
+    // the refused init leaves the path initializable
+    assert(CorpusStore.writeCorpusCow(
+      Seq((1L, "alpha")).toDF("doc_id", "text"), path, "doc_id", 8) == 0)
+    assert(CorpusStore.writeCorpusCow(
+      Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"), path,
+      "doc_id", 8) == 1)
     val d = CorpusStore.snapshotDelta(spark, path, 0, 1, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-    assert(d == Map(1L -> "added"), d.toString)
+    assert(d == Map(1L -> "unchanged", 2L -> "added"), d.toString)
     // keepLast beyond the history keeps everything, twice over
     CorpusStore.vacuumCorpusSnapshots(spark, path, keepLast = 99)
     assert(CorpusStore.currentGen(spark, path) == ((1, 0)))
-    assert(CorpusStore.readCorpusSnapshotAt(spark, path, 0).count() == 0)
+    assert(CorpusStore.readCorpusSnapshotAt(spark, path, 0).count() == 1)
   }
 
   test("multimodalNearDup: kinds absent from the corpus contribute no verdicts; no-text corpora flag nothing") {

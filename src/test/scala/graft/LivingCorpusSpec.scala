@@ -35,7 +35,7 @@ class LivingCorpusSpec extends SparkSpec {
       (2L, "epsilon zeta eta theta"),
       (3L, "iota kappa lambda mu")).toDF("doc_id", "text")
     Dedup.writeExactLedger(batch1, "text", ledger)
-    assert(CorpusStore.writeCorpusSnapshot(batch1, store) == 0)
+    assert(CorpusStore.writeCorpusCow(batch1, store, "doc_id", 8) == 0)
 
     // ── v1: a recrawl arrives with one new doc and one exact dup;
     // admission lets only the new content through ──
@@ -46,9 +46,9 @@ class LivingCorpusSpec extends SparkSpec {
     val admitted2 = Dedup.admitAgainstExactLedger(
       batch2, "doc_id", "text", ledger).select("doc_id", "text")
     assert(admitted2.select("doc_id").as[Long].collect().toSeq == Seq(5L))
-    assert(CorpusStore.writeCorpusSnapshot(
+    assert(CorpusStore.writeCorpusCow(
       CorpusStore.readCorpusSnapshot(spark, store).unionByName(admitted2),
-      store) == 1)
+      store, "doc_id", 8) == 1)
     Dedup.appendToExactLedger(admitted2, "text", ledger)
     Dedup.unpersistAll()
     // the delta between versions is exactly the admitted content
@@ -59,10 +59,10 @@ class LivingCorpusSpec extends SparkSpec {
 
     // ── takedown: doc 2's content must leave the corpus AND the
     // ledger (so a clean recrawl can come back) ──
-    assert(CorpusStore.writeCorpusSnapshot(
+    assert(CorpusStore.writeCorpusCow(
       CorpusStore.readCorpusSnapshot(spark, store)
         .where(col("doc_id") =!= 2L),
-      store) == 2)
+      store, "doc_id", 8) == 2)
     Dedup.deleteFromExactLedger(
       Seq("epsilon zeta eta theta").toDF("text"), "text", ledger)
     val d12 = CorpusStore.snapshotDelta(spark, store, 1, 2, "doc_id", "text")
@@ -77,9 +77,9 @@ class LivingCorpusSpec extends SparkSpec {
       batch3, "doc_id", "text", ledger).select("doc_id", "text")
     assert(admitted3.select("doc_id").as[Long].collect().toSeq == Seq(7L),
       "tombstoned content must re-admit")
-    assert(CorpusStore.writeCorpusSnapshot(
+    assert(CorpusStore.writeCorpusCow(
       CorpusStore.readCorpusSnapshot(spark, store).unionByName(admitted3),
-      store) == 3)
+      store, "doc_id", 8) == 3)
     Dedup.appendToExactLedger(admitted3, "text", ledger)
     Dedup.unpersistAll()
     val batch4 = Seq((8L, "epsilon zeta eta theta")).toDF("doc_id", "text")

@@ -215,10 +215,6 @@ class RetrievalSpec extends SparkSpec {
       // but BEFORE the CURRENT swap: run the real append, then roll
       // the pointer back to generation 0
       Retrieval.appendToBm25Index(batch, "doc_id", "text", dir)
-      // the rollback bypasses Hadoop's ChecksumFileSystem, so drop the
-      // .crc sidecar the committed pointer left behind
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(dir, ".CURRENT.crc"))
       java.nio.file.Files.write(
         java.nio.file.Paths.get(dir, "CURRENT"),
         "0".getBytes(java.nio.charset.StandardCharsets.UTF_8))

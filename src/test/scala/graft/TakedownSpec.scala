@@ -154,20 +154,20 @@ class TakedownSpec extends SparkSpec {
       s"absent ids touched buckets: $gen2Dirs")
   }
 
-  test("a full-layout corpus target fails fast BEFORE any store mutates") {
+  test("a corpus target that is not a store fails fast BEFORE any store mutates") {
     // round 16 — ADVICE: the COW check used to live in step 4 (inside
     // deleteFromCorpusCow), AFTER the index tombstones and the ledger
     // delete had landed — a half-applied takedown with no report
-    val full = tmp("graft-td-full")
+    val plain = tmp("graft-td-plain")
     val lsh = tmp("graft-td-full-lsh")
     val corpus = (0L to 9L).map(i => (i, text(i))).toDF("doc_id", "text")
       .localCheckpoint()
-    CorpusStore.writeCorpusSnapshot(corpus, full)
+    corpus.write.mode("overwrite").parquet(plain)
     Dedup.writeLshIndex(corpus, "doc_id", "text", lsh)
     val e = intercept[IllegalArgumentException] {
       Takedown.takedownEverywhere(spark, Seq(3L).toDF("doc_id"),
         "doc_id", "text",
-        TakedownTargets(corpusPath = Some(full), lshPath = Some(lsh)))
+        TakedownTargets(corpusPath = Some(plain), lshPath = Some(lsh)))
     }
     assert(e.getMessage.contains("not a copy-on-write"), e.getMessage)
     // NOTHING mutated: the LSH index still serves the doomed id and
@@ -178,6 +178,6 @@ class TakedownSpec extends SparkSpec {
         "doc_id", "text", lsh, threshold = 0.5).count()
       finally Dedup.unpersistAll()
     assert(hits == 1L, "index tombstoned before the fail-fast")
-    assert(CorpusStore.readCorpusSnapshot(spark, full).count() == 10)
+    assert(spark.read.parquet(plain).count() == 10)
   }
 }
