@@ -209,7 +209,7 @@ object CowScaleProbe {
     // ——— Ingest-log replay-guard cost (round 17 — verdict task 1):
     // the per-trigger `BatchLog.contains` probe BEFORE the fold (one
     // file per logged batch, all listed+footer-read) vs AFTER
-    // `BatchLog.compact` (watermark pointer read + single-file scan).
+    // `BatchLog.compact` (watermark read + single-file scan).
     // Round 18: the fold generalized into graft.sources.BatchLog and
     // the ANN serving loops' `serve_log` (Similarity.compactServeLog)
     // plus the index ingest loop's log ride the SAME module, so this
@@ -247,7 +247,7 @@ object CowScaleProbe {
       val freshBefore = probeMs(nb + 100L)
       val (_, foldSec) = time(BatchLog.compact(spark, logPath))
       val tailAfter = BatchLog.tailFiles(spark, logPath).size
-      val loggedAfter = probeMs(nb / 2L) // watermark pointer read
+      val loggedAfter = probeMs(nb / 2L) // watermark read
       val freshAfter = probeMs(nb + 100L) // one-file scan
       println(f"$nb,$tailBefore,$loggedBefore%.1f,$freshBefore%.1f," +
         f"$foldSec%.2f,$tailAfter,$loggedAfter%.1f,$freshAfter%.1f")

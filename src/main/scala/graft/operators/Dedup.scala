@@ -1260,7 +1260,7 @@ object Dedup {
     * output, so duplicated rows cannot change any probe result
     * (spec-pinned: a crashed-and-replayed ingest leaves the index
     * probe-identical to a clean batch rebuild). This recover-by-replay
-    * stance — rather than the BM25 generation-pointer commit — is
+    * stance — rather than the BM25 index's commit record — is
     * deliberate: LSH index rows are idempotent facts, while BM25's
     * n_docs/n_tokens stats would double-count.
     *

@@ -318,7 +318,7 @@ object EventsAnalytics {
     // carry the replay guard through BatchLog (round 18): the copy
     // must include the COMPACTED history, not just the tail, and the
     // new path's log re-folds immediately — one file + watermark, so
-    // the compacted ledger's guard starts life a pointer read
+    // the compacted ledger's guard starts life a watermark read
     graft.sources.BatchLog.readAll(spark, s"$inPath/ingest_log")
       .foreach(_.repartition(1).write.mode("overwrite")
         .parquet(s"$outPath/ingest_log"))

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * (round 13 — verdict task: "one report, uniform fields"). Each
   * index family grew its own monitor organically —
   * [[Similarity.cellStats]]/[[Similarity.needsRebuild]] for IVF,
-  * [[Dedup.lshBucketStats]] for LSH banding, the BM25 generation
-  * pointer — with different shapes, so a maintenance loop over a
+  * [[Dedup.lshBucketStats]] for LSH banding, the BM25 commit
+  * log — with different shapes, so a maintenance loop over a
   * catalog of indexes had to special-case every kind. This module
   * emits ONE row shape, with kind detected from the on-disk layout,
   * so "walk the catalog, compact what needsCompact, rebuild what
@@ -38,9 +38,10 @@ object IndexHealth {
     *    `emptyPartitions`: occupancy of the index's pruning unit
     *    (band buckets, ledger files, term buckets, cells). `skew` is
     *    max/mean — the worst-case probe-latency multiplier.
-    *  - `dataFiles`: physical fragment count (what append streams
-    *    grow and compaction restores).
-    *  - `generations`: committed append generations (BM25's pointer;
+    *  - `dataFiles`: physical fragment count over the trees the
+    *    committed version reads (what append streams grow and
+    *    compaction restores).
+    *  - `generations`: committed append generations (BM25's record;
     *    1 for the single-tree kinds).
     *  - `tombstones`: pending takedown rows awaiting physical
     *    removal (round-13 delete lifecycle).
@@ -107,13 +108,13 @@ object IndexHealth {
     */
   def report(spark: SparkSession, path: String): Health =
     // the corpus store FIRST, asked of CorpusStore, the one module that
-    // knows its layout (it keeps no CURRENT; its commit is a record).
+    // knows its layout, then the BM25 index, asked of Retrieval.
     // hnswmeta BEFORE centroids: a graph index carries the IVF cells
     // layout PLUS a graph tree — the ivf branch would mis-detect it
     // and maintain would then rebuild it graph-less (round 17)
     if (graft.sources.CorpusStore.isCow(spark, path))
       reportCorpusCow(spark, path)
-    else if (exists(spark, s"$path/CURRENT")) reportBm25(spark, path)
+    else if (Retrieval.isBm25Index(spark, path)) reportBm25(spark, path)
     else if (exists(spark, s"$path/hnswmeta")) reportHnsw(spark, path)
     else if (exists(spark, s"$path/centroids")) reportIvf(spark, path)
     else if (exists(spark, s"$path/buckets") &&
@@ -146,8 +147,8 @@ object IndexHealth {
       maxPartition = h.maxBucket,
       skew = h.skew,
       emptyPartitions = (h.numBuckets - h.populatedBuckets).toLong,
-      dataFiles = dataFileCount(spark, s"$path/parts") +
-        dataFileCount(spark, s"$path/deltas"),
+      dataFiles = graft.sources.CorpusStore.committedTrees(spark, path)
+        .map(dataFileCount(spark, _)).sum,
       generations = h.generations,
       tombstones = h.tombstonedRows,
       needsCompact = h.needsCompaction || h.needsVacuum,
@@ -251,25 +252,25 @@ object IndexHealth {
   }
 
   /** BM25 inverted index: partition unit = term bucket; generations
-    * from the committed pointer. needsCompact when append
+    * from the committed record. needsCompact when append
     * generations pile up (a probe reads its term buckets across all
     * of them) or tombstones await folding.
     */
   def reportBm25(spark: SparkSession, path: String,
                  maxGenerations: Int = 4,
                  maxDataFiles: Long = 256): Health = {
-    val numBuckets = graft.sources.TinyParquet
-      .readGroups(spark, s"$path/meta").head.getInteger("num_buckets", 0)
-    val (gen, base) = Retrieval.readCurrentGen(spark, path)
-    val counts = Retrieval.committedPostings(spark, path, gen, base)
+    val (gen, rec) = Retrieval.committed(spark, path)
+    val numBuckets = rec.numBuckets
+    val counts = Retrieval.committedPostings(spark, path, rec)
       .groupBy("tbucket").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val perBucket = (0 until numBuckets).map(b => counts.getOrElse(b, 0L))
     val rows = perBucket.sum
     val mean = rows.toDouble / numBuckets
-    val files = dataFileCount(spark, s"$path/postings")
+    val files = Retrieval.postingsTrees(path, rec)
+      .map(dataFileCount(spark, _)).sum
     val ts = tombstoneCount(spark, path)
-    val gens = gen - base + 1
+    val gens = gen - rec.base + 1
     Health(
       kind = "bm25",
       totalRows = rows,
@@ -395,7 +396,7 @@ object IndexHealth {
     *
     * Dispatch, per [[report]]'s kind detection:
     *  - `bm25`: [[Retrieval.compactBm25Index]] IN PLACE (its commit is
-    *    the atomic CURRENT rename, so no fresh path is needed);
+    *    an exclusively published record, so no fresh path is needed);
     *    `dstPath` is ignored.
     *  - `exact_ledger` / `lsh`: the kind's compaction into `dstPath`
     *    (fresh-tree stance — the source stays probe-able until the

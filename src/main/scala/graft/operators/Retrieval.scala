@@ -263,91 +263,110 @@ object Retrieval {
       coalesce(sum(size(col("_bm_toks"))), lit(0)).cast("long")
         .as("n_tokens"))
 
-  /** The committed index state: `$path/CURRENT` holds "g" or "g b" —
-    * postings generations b..g (b defaults to 0 when absent, the
-    * pre-compaction format) and the cumulative stats row at gen g are
-    * the index's visible state. The pointer is the COMMIT —
-    * everything else is written first, to generation-private
-    * directories old readers never look at, and becomes visible only
-    * when the rename below lands. `base` moves only at
-    * [[compactBm25Index]] time; both numbers ride ONE file so they
-    * commit in ONE atomic rename.
+  /** One committed generation g of a persisted BM25 index — its
+    * record, entry g of the index's [[graft.sources.GenLog]] at
+    * `$path/commits`: the term-bucket count, the oldest postings
+    * generation it reads (`base`, moved only by [[compactBm25Index]]),
+    * the postings trees of generations base..g (directories relative
+    * to the index) and the cumulative corpus stats. The record is the
+    * COMMIT: a generation's postings are written first, to a
+    * writer-private tree (`postings/gen=<g>/writer=<id>`) no record
+    * names yet, and become visible only when the record is published.
+    * Two writers that both read g race to publish g+1; the loser fails
+    * with a conflict, drops its own tree and never touches the
+    * winner's.
     */
-  private[operators] def readCurrentGen(
-      spark: org.apache.spark.sql.SparkSession, path: String): (Int, Int) =
-    graft.sources.GenPointer.read(spark, path)
+  private[graft] final case class Bm25Commit(numBuckets: Int, base: Int,
+      postings: Seq[String], nDocs: Long, nTokens: Long)
 
-  /** Atomic CURRENT commit — the shared
-    * [[graft.sources.GenPointer]] protocol (round 14: extracted so
-    * the crash-safety-critical rename and the race-free read live
-    * once, here and in CorpusStore).
+  private def commitLog(path: String): String = s"$path/commits"
+
+  /** Whether `path` holds a BM25 index — its commit log exists. */
+  private[operators] def isBm25Index(
+      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(commitLog(path))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** The committed generation and its record — one listing, one read. */
+  private[graft] def committed(spark: org.apache.spark.sql.SparkSession,
+      path: String): (Int, Bm25Commit) = {
+    val entry = graft.sources.GenLog.latest(spark, commitLog(path))
+    require(entry.nonEmpty, s"Retrieval: no BM25 index at $path")
+    val (g, bytes) = entry.get
+    (g.toInt, graft.sources.GenLog.json.readValue(bytes, classOf[Bm25Commit]))
+  }
+
+  /** The postings trees `rec` reads, as paths. */
+  private[operators] def postingsTrees(path: String,
+      rec: Bm25Commit): Seq[String] =
+    rec.postings.map(d => s"$path/$d")
+
+  /** A fresh writer-private postings tree for generation `gen`. */
+  private def newTree(gen: Int): String =
+    s"postings/gen=$gen/writer=${java.util.UUID.randomUUID()}"
+
+  /** Publish `rec` as generation `gen`, whose own tree is its last
+    * postings tree. When another writer published `gen` first, drop
+    * that tree and fail with a conflict.
     */
-  private def commitCurrentGen(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      gen: Int, base: Int = 0): Unit =
-    graft.sources.GenPointer.commit(spark, path, gen, base)
+  private def publishGen(spark: org.apache.spark.sql.SparkSession,
+      path: String, gen: Int, rec: Bm25Commit): Unit =
+    if (!graft.sources.GenLog.publish(spark, commitLog(path), gen,
+        graft.sources.GenLog.json.writeValueAsBytes(rec))) {
+      val p = new org.apache.hadoop.fs.Path(s"$path/${rec.postings.last}")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      throw new IllegalStateException(
+        s"Retrieval: commit conflict at $path — generation $gen was " +
+          "published by another writer first; nothing of this commit " +
+          "was published. Re-read the index and retry.")
+    }
 
-  /** Committed postings scan: only generations base..CURRENT are
-    * listed (explicit per-generation paths + basePath, so a crashed
-    * append's orphan directory — or a vacuumed pre-compaction one —
-    * is never even read for footers), with `gen` and `tbucket` both
-    * available as partition columns for pruning.
+  /** Committed postings scan: only the trees `rec` names are listed
+    * (explicit paths + basePath, so a crashed or losing writer's
+    * orphan tree — or a vacuumed pre-compaction one — is never even
+    * read for footers), with `gen` and `tbucket` both available as
+    * partition columns for pruning.
     */
   private[operators] def committedPostings(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      gen: Int, base: Int = 0): DataFrame =
+      rec: Bm25Commit): DataFrame =
     spark.read.option("basePath", s"$path/postings")
-      .parquet((base to gen).map(i => s"$path/postings/gen=$i"): _*)
+      .parquet(postingsTrees(path, rec): _*).drop("writer")
 
-  private[operators] def committedStats(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      gen: Int): DataFrame =
-    spark.read.parquet(s"$path/stats/gen=$gen").select("n_docs", "n_tokens")
-
-  /** The 1-row stats read driver-direct (r20 — TinyParquet) for the
-    * consumers that only want the two longs; the frame form above
-    * stays for plans that JOIN the stats in.
+  /** One batch's postings, bucketed, written to `dir`, and the batch's
+    * (n_docs, n_tokens) — the token-array projection persists locally
+    * and is released before returning (both consume it eagerly, the
+    * writeLshIndex pattern).
     */
-  private def committedStatsHead(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      gen: Int): (Long, Long) = {
-    val g = graft.sources.TinyParquet
-      .readGroups(spark, s"$path/stats/gen=$gen").head
-    (g.getLong("n_docs", 0), g.getLong("n_tokens", 0))
+  private def writeBatch(docs: DataFrame, idCol: String, textCol: String,
+      numBuckets: Int, dir: String): (Long, Long) = {
+    val toked = docs
+      .select(col(idCol).as("doc_id"),
+        TextAnalysis.tokens(col(textCol)).as("_bm_toks"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      postingsFromToked(toked)
+        .withColumn("tbucket",
+          pmod(xxhash64(col("term")), lit(numBuckets.toLong)).cast("int"))
+        .write.partitionBy("tbucket").parquet(dir)
+      val batch = statsOfToked(toked).head()
+      (batch.getLong(0), batch.getLong(1))
+    } finally toked.unpersist(false)
   }
-
-  /** Driver-direct write of the 1-row cumulative stats (r20 —
-    * TinyParquet; the values are already on the driver at every call
-    * site, so the repartition(1) Spark job was pure fixed cost).
-    */
-  private def writeBm25Stats(spark: org.apache.spark.sql.SparkSession,
-      path: String, gen: Int, nDocs: Long, nTokens: Long): Unit =
-    graft.sources.TinyParquet.write(spark, s"$path/stats/gen=$gen",
-      """message spark_schema {
-        |  required int64 n_docs;
-        |  required int64 n_tokens;
-        |}""".stripMargin,
-      Seq(Seq[Any](nDocs, nTokens)))
-
-  /** The index's bucket count — driver-direct 1-row read (r20). */
-  private def bm25NumBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String): Int =
-    graft.sources.TinyParquet.readGroups(spark, s"$path/meta").head
-      .getInteger("num_buckets", 0)
 
   /** Persist an inverted index for [[bm25AgainstIndex]]: postings
     * hash-partitioned into `numBuckets` term buckets (a probe reads
     * only its query terms' buckets — the partition-pruning contract
-    * the IVF cells and LSH bands use) plus the 1-row corpus stats.
-    * The corpus is tokenized ONCE per write: the token-array
-    * projection persists locally (released before returning — both
-    * the postings write and the stats aggregate consume it eagerly,
-    * the writeLshIndex pattern).
+    * the IVF cells and LSH bands use) plus the corpus stats.
+    * The corpus is tokenized ONCE per write.
     *
     * Layout is generational for failure-atomic appends: postings live
-    * under `postings/gen=<g>/tbucket=<b>`, the CUMULATIVE stats row
-    * under `stats/gen=<g>`, and `CURRENT` names the committed g —
-    * see [[appendToBm25Index]] for the commit protocol.
+    * under `postings/gen=<g>/writer=<id>/tbucket=<b>`, and generation
+    * g's record under `commits/<g>` names them and carries the
+    * CUMULATIVE stats — see [[Bm25Commit]] and [[appendToBm25Index]]
+    * for the commit protocol. A path that already holds an index is
+    * refused with the commit conflict.
     *
     * Sizing: a probe reads ~|query vocab| / numBuckets of the postings
     * bytes; more buckets prune harder but shrink files. At 100 TB
@@ -358,37 +377,23 @@ object Retrieval {
       docs: DataFrame, idCol: String, textCol: String, path: String,
       numBuckets: Int = 64): Unit = {
     require(numBuckets > 0, "writeBm25Index: numBuckets must be positive")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.sources.TinyParquet.write(spark, s"$path/meta",
-      "message spark_schema { required int32 num_buckets; }",
-      Seq(Seq[Any](numBuckets)))
-    val toked = docs
-      .select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("_bm_toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      postingsFromToked(toked)
-        .withColumn("tbucket",
-          pmod(xxhash64(col("term")), lit(numBuckets.toLong)).cast("int"))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(s"$path/postings/gen=0")
-      statsOfToked(toked)
-        .repartition(1).write.mode("overwrite").parquet(s"$path/stats/gen=0")
-    } finally toked.unpersist(false)
-    commitCurrentGen(spark, path, 0)
+    val tree = newTree(0)
+    val (nDocs, nTokens) =
+      writeBatch(docs, idCol, textCol, numBuckets, s"$path/$tree")
+    publishGen(docs.sparkSession, path, 0,
+      Bm25Commit(numBuckets, 0, Seq(tree), nDocs, nTokens))
   }
 
   /** Append a document batch to a persisted BM25 index, FAILURE-
-    * ATOMICALLY: the batch's postings and the new cumulative stats
-    * both land in generation-(g+1) directories (overwrite mode, so a
-    * half-written orphan from a previous crash is truncated, making
-    * the retry idempotent), and only then does the atomic CURRENT
-    * rename commit them TOGETHER. A crash anywhere before the rename
-    * leaves every reader — probes, flaggers, and the next append —
-    * on generation g with postings, df, n_docs and avgdl still
-    * mutually consistent; re-running the append lands the batch
-    * exactly once. Batch doc ids must be new; re-ingesting an id
+    * ATOMICALLY: the batch's postings land in a fresh writer-private
+    * generation-(g+1) tree, and only then does publishing record g+1,
+    * which carries the new cumulative stats, commit them TOGETHER. A
+    * crash anywhere before the publish leaves every reader — probes,
+    * flaggers, and the next append — on generation g with postings,
+    * df, n_docs and avgdl still mutually consistent; re-running the
+    * append lands the batch exactly once. A concurrent append that
+    * read the same g loses the publish and fails with a conflict,
+    * leaving no trace. Batch doc ids must be new; re-ingesting an id
     * after a SUCCESSFUL commit would double its postings silently
     * (the exact-ledger admission operator is the dedup gate for
     * that).
@@ -396,37 +401,23 @@ object Retrieval {
   def appendToBm25Index(
       docs: DataFrame, idCol: String, textCol: String, path: String): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    val numBuckets = bm25NumBuckets(spark, path)
-    val (gen, base) = readCurrentGen(spark, path)
-    val (oldDocs, oldToks) = committedStatsHead(spark, path, gen)
-    val toked = docs
-      .select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(col(textCol)).as("_bm_toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      postingsFromToked(toked)
-        .withColumn("tbucket",
-          pmod(xxhash64(col("term")), lit(numBuckets.toLong)).cast("int"))
-        .write.mode("overwrite").partitionBy("tbucket")
-        .parquet(s"$path/postings/gen=${gen + 1}")
-      val batch = statsOfToked(toked).head()
-      writeBm25Stats(spark, path, gen + 1,
-        oldDocs + batch.getLong(0), oldToks + batch.getLong(1))
-    } finally toked.unpersist(false)
-    commitCurrentGen(spark, path, gen + 1, base)
+    val (gen, rec) = committed(spark, path)
+    val tree = newTree(gen + 1)
+    val (nDocs, nTokens) =
+      writeBatch(docs, idCol, textCol, rec.numBuckets, s"$path/$tree")
+    publishGen(spark, path, gen + 1, rec.copy(postings = rec.postings :+ tree,
+      nDocs = rec.nDocs + nDocs, nTokens = rec.nTokens + nTokens))
   }
 
   /** Compact a persisted BM25 index, FAILURE-ATOMICALLY: rewrite the
     * committed generations base..g into ONE fresh generation g+1 and
-    * re-point CURRENT at "(g+1, base=g+1)" in a single atomic rename.
-    * The maintenance leg every appended index eventually needs: each
-    * [[appendToBm25Index]] adds a generation directory, so a probe of
-    * a long-lived index reads its query buckets across N generations'
-    * files — compaction collapses that back to one well-sized file
-    * set per bucket (the Layout.compact story, index-shaped). LSM
-    * semantics without the tree: appends are level-0 pushes,
-    * compaction is the full merge.
+    * publish its record with base = g+1. The maintenance leg every
+    * appended index eventually needs: each [[appendToBm25Index]] adds
+    * a generation tree, so a probe of a long-lived index reads its
+    * query buckets across N generations' files — compaction collapses
+    * that back to one well-sized file set per bucket (the
+    * Layout.compact story, index-shaped). LSM semantics without the
+    * tree: appends are level-0 pushes, compaction is the full merge.
     *
     * Merging is a pure file rewrite — no re-tokenization, no
     * re-aggregation: (doc_id, term) rows are disjoint across
@@ -435,43 +426,37 @@ object Retrieval {
     * over unchanged.
     *
     * Crash safety is the append protocol's: everything lands in
-    * generation-private directories first (overwrite mode makes a
-    * retry idempotent over a half-written orphan); a crash before the
-    * CURRENT rename leaves readers on (g, base) with every old
-    * generation intact. Old generation directories below the new base
-    * become garbage only AFTER the commit; `vacuum = true` (default)
-    * deletes them post-commit — safe because no reader of the new
-    * CURRENT ever lists them, and a crash mid-vacuum just leaves
-    * unreferenced directories for the next compaction's vacuum.
-    * A never-compacted index (legacy bare-int CURRENT) reads as
-    * base 0 and compacts fine.
+    * writer-private trees first; a crash before the publish leaves
+    * readers on (g, base) with every old generation intact. Old
+    * generations below the new base become garbage only AFTER the
+    * commit; `vacuum = true` (default) then prunes their records and
+    * deletes their trees — safe because no reader of the new record
+    * ever lists them, and a crash mid-vacuum just leaves unreferenced
+    * directories for the next compaction's vacuum.
     */
   def compactBm25Index(
       spark: org.apache.spark.sql.SparkSession, path: String,
       vacuum: Boolean = true): Unit = {
-    val (gen, base) = readCurrentGen(spark, path)
+    val (gen, rec) = committed(spark, path)
     // takedown fold (round 13): applicable tombstones leave the
     // rewrite physically, and the new cumulative stats row is the
     // corrected one — from the new base onward the tombstones are
     // below base and thus ignored by every probe, so a crash between
     // the commit and the vacuum below cannot double-subtract
-    val ts = bm25Tombstones(spark, path, base)
+    val ts = bm25Tombstones(spark, path, rec.base)
     val (tsDocs, tsToks) = tombstoneStatsAdjust(ts)
-    postingsMinusTombstones(
-      committedPostings(spark, path, gen, base), ts)
+    val tree = newTree(gen + 1)
+    postingsMinusTombstones(committedPostings(spark, path, rec), ts)
       .select("doc_id", "term", "dl", "tf", "tbucket")
-      .write.mode("overwrite").partitionBy("tbucket")
-      .parquet(s"$path/postings/gen=${gen + 1}")
-    val (curDocs, curToks) = committedStatsHead(spark, path, gen)
-    writeBm25Stats(spark, path, gen + 1, curDocs - tsDocs, curToks - tsToks)
-    commitCurrentGen(spark, path, gen + 1, gen + 1)
+      .write.partitionBy("tbucket").parquet(s"$path/$tree")
+    publishGen(spark, path, gen + 1, Bm25Commit(rec.numBuckets, gen + 1,
+      Seq(tree), rec.nDocs - tsDocs, rec.nTokens - tsToks))
     if (vacuum) {
       val conf = spark.sparkContext.hadoopConfiguration
-      (base to gen).foreach { g =>
+      graft.sources.GenLog.prune(spark, commitLog(path), gen + 1)
+      (rec.base to gen).foreach { g =>
         val p = new org.apache.hadoop.fs.Path(s"$path/postings/gen=$g")
         p.getFileSystem(conf).delete(p, true)
-        val sp = new org.apache.hadoop.fs.Path(s"$path/stats/gen=$g")
-        sp.getFileSystem(conf).delete(sp, true)
       }
       // folded tombstones are dead weight (below the new base);
       // dropping the tree is safe even mid-crash — leftovers are
@@ -513,7 +498,7 @@ object Retrieval {
       spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, idCol: String, path: String,
       maxTombstones: Long = Dedup.defaultMaxTombstones): Unit = {
-    val (gen, base) = readCurrentGen(spark, path)
+    val (gen, rec) = committed(spark, path)
     // BM25 tombstones land only for ids the index actually HOLDS (the
     // postings join below filters the rest), so the guard must count
     // the held set, not the request — a bulk takedown feed of mostly-
@@ -521,7 +506,7 @@ object Retrieval {
     // would never be written (round-14 review fix). Persisting the
     // held frame makes the guard's count and the write one
     // computation.
-    val held = committedPostings(spark, path, gen, base)
+    val held = committedPostings(spark, path, rec)
       .join(broadcast(ids.select(col(idCol).as("doc_id")).distinct()),
         Seq("doc_id"))
       .groupBy("doc_id").agg(max("dl").as("dl"))
@@ -580,30 +565,27 @@ object Retrieval {
       path: String, k: Int, k1: Double = 1.2, b: Double = 0.75,
       scope: Dedup.CacheScope = Dedup.batchScope): DataFrame = {
     val spark = queries.sparkSession
-    val numBuckets = bm25NumBuckets(spark, path)
-    val (gen, base) = readCurrentGen(spark, path)
+    val (_, rec) = committed(spark, path)
     val qterms = queryTerms(queries, queryIdCol, queryTextCol)
     // bounded collect: ≤ |query vocab| bucket ids
     val buckets = qterms
-      .select(pmod(xxhash64(col("term")), lit(numBuckets.toLong))
+      .select(pmod(xxhash64(col("term")), lit(rec.numBuckets.toLong))
         .cast("int").as("tb"))
       .distinct().collect().map(_.getInt(0)).toSeq
     // takedown: tombstoned docs leave the postings read (so df counts
     // exclude them too — dfreq derives from `matched`) and the stats
     // row is corrected, giving exact parity with an index that never
     // held them
-    val ts = bm25Tombstones(spark, path, base)
+    val ts = bm25Tombstones(spark, path, rec.base)
     val matched = scope.persistTracked(postingsMinusTombstones(
-      committedPostings(spark, path, gen, base)
+      committedPostings(spark, path, rec)
         .where(col("tbucket").isin(buckets: _*))
         .join(broadcast(qterms.select("term").distinct()), Seq("term"))
         .select("doc_id", "term", "dl", "tf"), ts))
     val (tsDocs, tsToks) = tombstoneStatsAdjust(ts)
-    val stats =
-      if (tsDocs == 0L) committedStats(spark, path, gen)
-      else committedStats(spark, path, gen)
-        .select((col("n_docs") - tsDocs).as("n_docs"),
-          (col("n_tokens") - tsToks).as("n_tokens"))
+    val stats = spark.createDataFrame(
+        Seq((rec.nDocs - tsDocs, rec.nTokens - tsToks)))
+      .toDF("n_docs", "n_tokens")
     scoreTopK(matched, stats, qterms, k, k1, b)
   }
 
@@ -640,11 +622,10 @@ object Retrieval {
     require(queries.nonEmpty, "bm25FlagAgainstIndex: empty query set")
     require(k1 > 0 && b >= 0 && b <= 1, s"bm25: need k1 > 0, b in [0,1]")
     val spark = docs.sparkSession
-    val (curGen, curBase) = readCurrentGen(spark, path)
-    val ts = bm25Tombstones(spark, path, curBase)
+    val (_, rec) = committed(spark, path)
+    val ts = bm25Tombstones(spark, path, rec.base)
     val (tsDocs, tsToks) = tombstoneStatsAdjust(ts)
-    val (csDocs, csToks) = committedStatsHead(spark, path, curGen)
-    val (nDocs, nTokens) = (csDocs - tsDocs, csToks - tsToks)
+    val (nDocs, nTokens) = (rec.nDocs - tsDocs, rec.nTokens - tsToks)
     require(nDocs > 0, s"bm25FlagAgainstIndex: empty index at $path")
     val avgdl = nTokens.toDouble / nDocs
 
@@ -659,7 +640,7 @@ object Retrieval {
     val vocab = qtoks.flatMap(_._2).distinct
     // df per query term from the index — one partition-pruned probe of
     // the term buckets, ≤ |vocab| result rows
-    val numBuckets = bm25NumBuckets(spark, path)
+    val numBuckets = rec.numBuckets
     val dfMap: Map[String, Long] = {
       import spark.implicits._
       val vdf = vocab.toDF("term")
@@ -667,7 +648,7 @@ object Retrieval {
           pmod(xxhash64(col("term")), lit(numBuckets.toLong)).cast("int"))
       val tbs = vdf.select("tb").distinct().collect().map(_.getInt(0)).toSeq
       postingsMinusTombstones(
-        committedPostings(spark, path, curGen, curBase)
+        committedPostings(spark, path, rec)
           .where(col("tbucket").isin(tbs: _*)), ts)
         .join(broadcast(vdf.select("term")), Seq("term"))
         .groupBy("term").agg(count(lit(1)).as("df"))

@@ -25,7 +25,7 @@ import graft.sources.CorpusStore
   *  3. the ledger entry goes (so a clean future recrawl re-admits —
   *     the LivingCorpusSpec re-admission contract);
   *  4. the corpus COW delete commits LAST — one bucket-local
-  *     generation, the atomic pointer flip being the operation's
+  *     generation, its published commit record being the operation's
   *     "done".
   *
   * Idempotent by composition: tombstone appends are idempotent facts

@@ -14,34 +14,35 @@ import org.apache.spark.sql.functions._
   *
   *  - [[contains]] — the replay probe — consults, in order: the
   *    WATERMARK (max contiguous-from-0 batch id as of the last fold,
-  *    one raw pointer read; Spark's micro-batch ids are contiguous
-  *    from 0 per checkpoint, so a restart's replayed id almost always
-  *    resolves here), then the single COMPACT file (batch_id min/max
-  *    + predicate pushdown), then the since-fold TAIL (bounded by the
-  *    maintenance cadence, never the stream's lifetime);
+  *    carried in the fold's record; Spark's micro-batch ids are
+  *    contiguous from 0 per checkpoint, so a restart's replayed id
+  *    almost always resolves here), then the single COMPACT file
+  *    (batch_id min/max + predicate pushdown), then the since-fold
+  *    TAIL (bounded by the maintenance cadence, never the stream's
+  *    lifetime);
   *  - [[compact]] — fold the previous compact file plus every tail
-  *    file into ONE sorted parquet under an atomic [[GenPointer]]
-  *    swap, record the watermark, delete the folded tail.
+  *    file into ONE sorted parquet, publish it as the next entry of
+  *    the fold log `<log>_compact/folds/` ([[GenLog]]), delete the
+  *    folded tail.
   *
   * The log's SCHEMA is the caller's — any columns plus a `batch_id`
   * castable to long. Crash-safe by the store's commit ordering —
-  * (1) materialize in a generation-private dir no reader resolves,
-  * (2) one atomic pointer rename publishes, (3) the
-  * watermark commits (conservative: computed from exactly the folded
-  * ids), (4) superseded generations and the snapshotted tail delete —
-  * with the fold's writer token ([[stampWriterToken]]) verified
-  * immediately before the swap. Idempotent and convergent from any
-  * crash state: a failure before (2) leaves the old state fully readable; after (2), only
-  * harmless duplicates the existence probe never notices and the
-  * next fold dedups.
+  * (1) materialize in a writer-private directory no record names,
+  * (2) publish the fold record (the file and its watermark) with the
+  * one exclusive publish, (3) prune the superseded records and delete
+  * their files and the snapshotted tail. A failure before (2) leaves
+  * the old state fully readable; after (2), only harmless duplicates
+  * the existence probe never notices and the next fold dedups.
   *
-  * Round-18 hardening (r17 ADVICE): [[contains]] re-resolves its
-  * sources and retries when a CONCURRENT fold deletes a tail or
-  * compact file mid-scan; the fold fails loudly on an unrenamable
-  * part file; cleanup retires EVERY superseded generation below the
-  * committed one, so a crash between swap and cleanup can never
-  * orphan a directory forever (the old direct-predecessor-only sweep
-  * could).
+  * Concurrent folds fail safe by construction: two folds that read
+  * the same record race to publish the next one, and the loser fails
+  * with a conflict, having published nothing and deleted no tail file.
+  *
+  * [[contains]] re-resolves its sources and retries when a CONCURRENT
+  * fold deletes a tail or compact file mid-scan (r17 ADVICE); cleanup
+  * retires EVERY superseded generation below the committed one, so a
+  * crash between publish and cleanup can never orphan a directory
+  * forever.
   */
 private[graft] object BatchLog {
 
@@ -49,29 +50,28 @@ private[graft] object BatchLog {
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def exists(spark: SparkSession, path: String): Boolean =
-    fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
-
-  /** The committed compact-log parquet file for `logPath`, whether or
-    * not it exists yet: `<logPath>_compact/gen=<k>/LOG.parquet` with
-    * the generation resolved from the sibling [[GenPointer]] — the
-    * one commit primitive, so the fold swaps atomically.
+  /** One fold's record: its parquet file, relative to `<log>_compact`,
+    * and the max-contiguous-from-0 batch id it holds (-1 for none).
     */
-  private def compactFile(spark: SparkSession, logPath: String): String = {
-    val root = s"${logPath}_compact"
-    if (!GenPointer.exists(spark, root)) s"$root/gen=-1/LOG.parquet"
-    else s"$root/gen=${GenPointer.read(spark, root)._1}/LOG.parquet"
-  }
+  private[sources] final case class Fold(file: String, watermark: Long)
+
+  private def foldLog(logPath: String): String = s"${logPath}_compact/folds"
+
+  /** The newest fold's generation and record, if the log was folded. */
+  private def newestFold(spark: SparkSession,
+      logPath: String): Option[(Long, Fold)] =
+    GenLog.latest(spark, foldLog(logPath)).map { case (k, bytes) =>
+      k -> GenLog.json.readValue(bytes, classOf[Fold])
+    }
+
+  private def foldFile(logPath: String, fold: Fold): String =
+    s"${logPath}_compact/${fold.file}"
 
   /** The max-contiguous-from-0 batch id as of the last fold, if one
-    * was recorded — a raw pointer read.
+    * was recorded — one listing and one record read.
     */
-  def watermark(spark: SparkSession, logPath: String): Option[Long] = {
-    val wm = s"${logPath}_compact/watermark"
-    if (GenPointer.exists(spark, wm))
-      Some(GenPointer.read(spark, wm)._1.toLong)
-    else None
-  }
+  def watermark(spark: SparkSession, logPath: String): Option[Long] =
+    newestFold(spark, logPath).map(_._2.watermark).filter(_ >= 0L)
 
   /** The tail's physical parquet files (what grows one file per
     * logged batch between folds) — filesystem listing only.
@@ -90,7 +90,7 @@ private[graft] object BatchLog {
     * maintained-log invariant).
     */
   def hasCompact(spark: SparkSession, logPath: String): Boolean =
-    exists(spark, compactFile(spark, logPath))
+    GenLog.bounds(spark, foldLog(logPath)).isDefined
 
   /** Every logged row — the previous compact file plus the tail — or
     * None for a log never written. The carry-over read for
@@ -100,9 +100,8 @@ private[graft] object BatchLog {
     * folded batch id at the new path.
     */
   def readAll(spark: SparkSession, logPath: String): Option[DataFrame] = {
-    val compact = compactFile(spark, logPath)
-    val srcs = (if (exists(spark, compact)) Seq(compact) else Nil) ++
-      (if (tailFiles(spark, logPath).nonEmpty) Seq(logPath) else Nil)
+    val srcs = newestFold(spark, logPath).map(f => foldFile(logPath, f._2))
+      .toSeq ++ (if (tailFiles(spark, logPath).nonEmpty) Seq(logPath) else Nil)
     if (srcs.isEmpty) None else Some(spark.read.parquet(srcs: _*))
   }
 
@@ -159,20 +158,17 @@ private[graft] object BatchLog {
         }
       }
     def attempt(): Boolean = {
-      if (watermark(spark, logPath).exists(batchId <= _)) return true
-      val compact = compactFile(spark, logPath)
-      val compactSrc =
-        if (exists(spark, compact))
-          Seq(new org.apache.hadoop.fs.Path(compact))
-        else Nil
+      val fold = newestFold(spark, logPath).map(_._2)
+      if (fold.exists(batchId <= _.watermark)) return true
+      val compact = fold.map(foldFile(logPath, _)).toSeq
       val tailSrc = tailFiles(spark, logPath)
         .map(n => new org.apache.hadoop.fs.Path(s"$logPath/$n"))
-      try (compactSrc ++ tailSrc).exists(fileHas)
+      try (compact.map(new org.apache.hadoop.fs.Path(_)) ++ tailSrc)
+        .exists(fileHas)
       catch {
         case _: BatchIdShapeFallback =>
           val sources =
-            (if (compactSrc.nonEmpty) Seq(compact) else Nil) ++
-              (if (tailSrc.nonEmpty) Seq(logPath) else Nil)
+            compact ++ (if (tailSrc.nonEmpty) Seq(logPath) else Nil)
           sources.nonEmpty &&
             spark.read.parquet(sources: _*)
               .where(col("batch_id") === batchId).limit(1).count() > 0
@@ -208,62 +204,64 @@ private[graft] object BatchLog {
   }
 
   /** Fold the whole logged history — previous compact file plus every
-    * tail file — into ONE sorted parquet file, record the watermark,
-    * and retire every superseded generation and the folded tail.
-    * Returns the number of tail files folded.
+    * tail file — into ONE sorted parquet file in a writer-private
+    * directory, and publish its record (the file and its watermark) as
+    * the fold log's next entry. When another fold published that entry
+    * first, this fails with a conflict, having published nothing and
+    * deleted no tail file. Otherwise, while this fold is still the
+    * newest, it retires every superseded generation and the folded
+    * tail. Returns the number of tail files folded and retired.
     */
   def compact(spark: SparkSession, logPath: String): Int = {
     import spark.implicits._
     val tail = tailFiles(spark, logPath)
+    if (tail.isEmpty) return 0
     val root = s"${logPath}_compact"
-    val prev =
-      if (GenPointer.exists(spark, root))
-        Some(GenPointer.read(spark, root)._1)
-      else None
-    val prevFile = prev.map(g => s"$root/gen=$g/LOG.parquet")
-      .filter(exists(spark, _))
-    if (tail.isEmpty && prevFile.isDefined) return 0
-    val srcs = prevFile.toSeq ++ tail.map(n => s"$logPath/$n")
-    if (srcs.isEmpty) return 0
-    val all = spark.read.parquet(srcs: _*)
+    val prev = newestFold(spark, logPath)
+    val gen = prev.map(_._1 + 1).getOrElse(0L)
+    val dir = s"gen=$gen/${java.util.UUID.randomUUID()}"
+    def conflict(cause: Throwable) = new IllegalStateException(
+      s"BatchLog: fold conflict at $logPath — generation $gen was " +
+        "published by another fold first; nothing of this fold was " +
+        "published and no tail file was deleted. Re-run the fold.", cause)
+    // a fold that lost to a concurrent one can find its inputs already
+    // retired by the winner's cleanup
+    try spark.read.parquet(
+        prev.map(p => foldFile(logPath, p._2)).toSeq ++
+          tail.map(n => s"$logPath/$n"): _*)
       .withColumn("batch_id", col("batch_id").cast("long"))
       .dropDuplicates("batch_id")
-    val gen = prev.map(_ + 1).getOrElse(0)
-    all.repartition(1).sortWithinPartitions("batch_id")
-      .write.mode("overwrite").parquet(s"$root/gen=$gen")
-    // the dir-level overwrite writes part-*.parquet; give the reader
-    // ONE stable name so the committed file is addressable without a
-    // listing
+      .repartition(1).sortWithinPartitions("batch_id")
+      .write.parquet(s"$root/$dir")
+    catch { case e: Throwable if isMissingFile(e) => throw conflict(e) }
     val f = fs(spark, root)
-    val genDir = new org.apache.hadoop.fs.Path(s"$root/gen=$gen")
-    val part = f.listStatus(genDir).map(_.getPath)
-      .find(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
+    val file = f.listStatus(new org.apache.hadoop.fs.Path(s"$root/$dir"))
+      .map(_.getPath.getName)
+      .find(n => n.endsWith(".parquet") && !n.startsWith("."))
       .getOrElse(throw new IllegalStateException(
-        s"BatchLog.compact: fold wrote no parquet file under $genDir"))
-    val dst = new org.apache.hadoop.fs.Path(s"$root/gen=$gen/LOG.parquet")
-    if (!f.rename(part, dst))
-      throw new IllegalStateException(
-        s"BatchLog.compact: could not rename $part to $dst — refusing " +
-          "to publish a fold whose committed name would not resolve")
-    val token = stampWriterToken(spark, s"$root/gen=$gen")
+        s"BatchLog.compact: fold wrote no parquet file under $root/$dir"))
     // watermark: the longest 0..W prefix with every id logged — one
     // window over the (metadata-scale) id column
     val w = org.apache.spark.sql.expressions.Window.orderBy("batch_id")
-    val wm = spark.read.parquet(s"$root/gen=$gen/LOG.parquet")
+    val wm = spark.read.parquet(s"$root/$dir/$file")
       .select("batch_id")
       .withColumn("_rn", row_number().over(w))
       .where(col("batch_id") === col("_rn").cast("long") - 1L)
       .agg(max("batch_id")).as[Option[Long]].head()
-    verifyWriterToken(spark, s"$root/gen=$gen", token)
-    GenPointer.commit(spark, root, gen)
-    // the pointer carries an Int; a stream past 2^31 micro-batches
-    // (68 years at 1/s) keeps a stale-but-conservative watermark
-    wm.filter(_ <= Int.MaxValue.toLong)
-      .foreach(v => GenPointer.commit(spark, s"$root/watermark", v.toInt))
+    val record = GenLog.json.writeValueAsBytes(
+      Fold(s"$dir/$file", wm.getOrElse(-1L)))
+    if (!GenLog.publish(spark, foldLog(logPath), gen, record)) {
+      f.delete(new org.apache.hadoop.fs.Path(s"$root/$dir"), true)
+      throw conflict(null)
+    }
+    // a newer fold already read this one (or this one landed below the
+    // newest, at a number a prune had freed): the newest owns cleanup
+    if (!GenLog.bounds(spark, foldLog(logPath)).exists(_._1 == gen)) return 0
     // retire EVERY superseded generation (not just the direct
-    // predecessor — a crash between swap and cleanup must not orphan
-    // a dir forever, r17 ADVICE) and the folded tail; failures past
-    // the pointer swap leave only harmless duplicates
+    // predecessor — a crash between publish and cleanup must not
+    // orphan a dir forever, r17 ADVICE) and the folded tail; failures
+    // past the publish leave only harmless duplicates
+    GenLog.prune(spark, foldLog(logPath), gen)
     genDirsBelow(spark, root, gen).foreach { p =>
       if (f.exists(p)) f.delete(p, true)
     }
@@ -277,51 +275,11 @@ private[graft] object BatchLog {
     tail.size
   }
 
-  /** Best-effort concurrent-fold tripwire, in two halves so the
-    * guarded window covers the whole fold: [[stampWriterToken]] writes
-    * a fold-unique token as an underscore file (ignored by parquet
-    * readers) into the fold's generation directory right after its
-    * data lands, and [[verifyWriterToken]] re-reads it immediately
-    * before the pointer swap. A token that changed or vanished means
-    * another fold overwrote the directory in between, and this one
-    * fails rather than publish over it. The verify→swap window is not
-    * atomic, so this is a tripwire, not a lock.
-    */
-  private def stampWriterToken(spark: SparkSession, dir: String): String = {
-    val token = java.util.UUID.randomUUID().toString
-    val out = fs(spark, dir).create(
-      new org.apache.hadoop.fs.Path(s"$dir/_WRITER"), true)
-    try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    token
-  }
-
-  private def verifyWriterToken(spark: SparkSession, dir: String,
-      token: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_WRITER")
-    // the file VANISHING is the concurrent-overwrite signature; any
-    // OTHER read-back I/O failure propagates, since mapping it to a
-    // mismatch would blame a concurrent fold for a transient storage
-    // error
-    val readBack =
-      try {
-        val in = fs(spark, dir).open(p)
-        try new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => "" }
-    if (readBack != token)
-      throw new IllegalStateException(
-        s"BatchLog: concurrent fold detected at $dir — another fold " +
-          "overwrote this generation between its write and commit; " +
-          "serialize folds and retry.")
-  }
-
   /** Every `gen=<k>` directory under `root` with k < `below` —
     * the superseded-generation sweep set.
     */
   private def genDirsBelow(spark: SparkSession, root: String,
-      below: Int): Seq[org.apache.hadoop.fs.Path] = {
+      below: Long): Seq[org.apache.hadoop.fs.Path] = {
     val f = fs(spark, root)
     val r = new org.apache.hadoop.fs.Path(root)
     if (!f.exists(r)) Nil
@@ -329,8 +287,7 @@ private[graft] object BatchLog {
       .filter { p =>
         val n = p.getName
         n.startsWith("gen=") &&
-          scala.util.Try(n.stripPrefix("gen=").toInt).toOption
-            .exists(_ < below)
+          n.stripPrefix("gen=").toLongOption.exists(_ < below)
       }.toSeq
   }
 }

@@ -88,13 +88,10 @@ import graft.operators.Dedup
   * THE RECORD IS THE COMMIT. A writer reads the newest record g,
   * materializes its trees under a directory no other writer can name
   * (its `<writer>` id below `gen=<g+1>`) and no reader lists, then
-  * publishes `_log/<g+1>` EXCLUSIVELY: the record is written to a temp
-  * file and linked into place with link(2) on local paths, which fails
-  * with EEXIST, or renamed without OVERWRITE through FileContext on
-  * other filesystems (HDFS's rename2 refuses an existing target). The
-  * committed generation (CURRENT, below) is the newest record and the
-  * oldest retained one the oldest record, both from ONE listing of
-  * `_log/`. Readers
+  * publishes `_log/<g+1>` through [[GenLog]], the one exclusive
+  * publish every generational artifact shares. The committed
+  * generation is the newest record and the oldest retained one the
+  * oldest record, both from ONE listing of `_log/`. Readers
   * resolve that once (at DataFrame construction) to explicit tree
   * directories, and trees are never mutated after commit — so a
   * reader that resolved before a commit keeps reading its version
@@ -102,15 +99,13 @@ import graft.operators.Dedup
   * CorpusStoreSpec).
   *
   * CONCURRENT WRITERS fail safe by construction: two writers that
-  * both read g both try to publish g+1, exactly one link succeeds, and
+  * both read g both try to publish g+1, exactly one succeeds, and
   * the other fails with a conflict error naming the path and the
   * generation, having published nothing. Its trees sit in its own
   * directory, which no record names, so the winner's trees are never
   * touched and no reader ever sees the loser's rows; the next
   * [[vacuumCorpusSnapshots]] sweeps them. The loser re-reads and
-  * retries. Object stores without a conditional put (an exclusive
-  * create, or a rename that refuses to overwrite) cannot give this
-  * guarantee and are out of scope.
+  * retries.
   *
   * Every public entry point first checks that `path` IS a store
   * (`_log/` present), so a BM25 index or a plain parquet directory is
@@ -176,20 +171,15 @@ object CorpusStore {
   }
 
   /** [[currentGen]] without the store guard, for callers past it: one
-    * listing of `_log/`, whose record names are the retained
-    * generations (a publish's temp file is dot-prefixed).
+    * listing of `_log/`.
     */
   private def pointer(spark: SparkSession, path: String): (Int, Int) = {
-    val gens = recordGens(spark, path)
-    require(gens.nonEmpty,
+    val bounds = GenLog.bounds(spark, s"$path/_log")
+    require(bounds.nonEmpty,
       s"CorpusStore: no commit record at $path — no committed snapshot")
-    (gens.max, gens.min)
+    val (g, b) = bounds.get
+    (g.toInt, b.toInt)
   }
-
-  private def recordGens(spark: SparkSession, path: String): Seq[Int] =
-    fs(spark, path).listStatus(new org.apache.hadoop.fs.Path(s"$path/_log"))
-      .map(_.getPath.getName).filter(n => n.nonEmpty && n.forall(_.isDigit))
-      .map(_.toInt).toSeq
 
   /** One tree of one bucket: the generation that wrote it, whether it
     * is a delta (under `deltas/`) or a base (under `parts/`), its
@@ -272,63 +262,29 @@ object CorpusStore {
       trees.find(_.gen == srcGen).map(_.dir)
   }
 
-  private val json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-    .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
-    .build()
-
   /** Generation `gen`'s commit record — one small JSON read. */
   private[graft] def record(spark: SparkSession, path: String,
-      gen: Int): CommitRecord = {
-    val in = fs(spark, path).open(
-      new org.apache.hadoop.fs.Path(s"$path/_log/$gen"))
-    try json.readValue(in: java.io.InputStream, classOf[CommitRecord])
-    finally in.close()
-  }
+      gen: Int): CommitRecord =
+    GenLog.json.readValue(GenLog.read(spark, s"$path/_log", gen),
+      classOf[CommitRecord])
 
   /** The newest record — the state every write starts from. */
   private def head(spark: SparkSession, path: String): CommitRecord =
     record(spark, path, pointer(spark, path)._1)
 
-  /** Publish `rec` as `_log/<rec.gen>` — the commit — EXCLUSIVELY: the
-    * bytes go to a dot-prefixed temp file, which is then linked into
-    * place with `Files.createLink` (link(2), EEXIST when the record
-    * exists) on local paths, or renamed without OVERWRITE through
-    * FileContext on other filesystems — the local/remote split
-    * [[GenPointer.commit]] makes. `FileSystem.create(p, overwrite =
-    * false)` is NOT exclusive: the local filesystem checks `exists()`
-    * and then opens a truncating stream. Both files go through the raw
-    * filesystem, so no checksum sidecar is left. When the record
-    * already exists another writer won `rec.gen`: this fails with a
-    * conflict naming the path and generation, nothing published, and
-    * the temp file removed either way.
+  /** Publish `rec` as `_log/<rec.gen>` — the commit — through
+    * [[GenLog.publish]]. When the record already exists another writer
+    * won `rec.gen`: this fails with a conflict naming the path and
+    * generation, nothing published.
     */
   private[graft] def publish(spark: SparkSession, path: String,
       rec: CommitRecord): Int = {
-    val f = GenPointer.rawFs(spark, path)
-    val dir = new org.apache.hadoop.fs.Path(s"$path/_log")
-    val dst = new org.apache.hadoop.fs.Path(dir, rec.gen.toString)
-    val tmp = new org.apache.hadoop.fs.Path(dir,
-      s".${rec.gen}.${java.util.UUID.randomUUID()}.tmp")
-    val out = f.create(tmp, false)
-    try out.write(json.writeValueAsBytes(rec)) finally out.close()
-    try {
-      if ("file" == dst.toUri.getScheme ||
-          f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem])
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-      else
-        org.apache.hadoop.fs.FileContext
-          .getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
-          .rename(tmp, dst)
-    } catch {
-      case e @ (_: java.nio.file.FileAlreadyExistsException |
-                _: org.apache.hadoop.fs.FileAlreadyExistsException) =>
-        throw new IllegalStateException(
-          s"CorpusStore: commit conflict at $path — generation ${rec.gen} " +
-            "was published by another writer first; nothing of this " +
-            "commit was published. Re-read the store and retry.", e)
-    } finally f.delete(tmp, false)
+    if (!GenLog.publish(spark, s"$path/_log", rec.gen,
+        GenLog.json.writeValueAsBytes(rec)))
+      throw new IllegalStateException(
+        s"CorpusStore: commit conflict at $path — generation ${rec.gen} " +
+          "was published by another writer first; nothing of this " +
+          "commit was published. Re-read the store and retry.")
     rec.gen
   }
 
@@ -821,7 +777,8 @@ object CorpusStore {
     // `_log/` first: from here on the directory is a store, so a
     // founding that fails before its record can simply be retried
     fs(spark, path).mkdirs(new org.apache.hadoop.fs.Path(s"$path/_log"))
-    val prev = recordGens(spark, path).maxOption.map(record(spark, path, _))
+    val prev = GenLog.bounds(spark, s"$path/_log")
+      .map(b => record(spark, path, b._1.toInt))
     prev.foreach { r =>
       require(r.idCol == idCol && r.numBuckets == numBuckets,
         s"writeCorpusCow: store at $path buckets by " +
@@ -1431,8 +1388,8 @@ object CorpusStore {
 
   /** One pull of a named durable follower — the consumer-group idiom
     * over [[corpusChangesSince]]: the follower's acknowledged
-    * generation lives at `path/followers/<consumer>` (the same atomic
-    * [[GenPointer]] file as every commit in this module), each call
+    * generation is the newest entry of the [[GenLog]] at
+    * `path/followers/<consumer>` (entry name = generation), each call
     * hands `body` the changes from that offset to CURRENT, and the
     * offset advances ONLY after `body` returns — a crash inside the
     * body replays the same generation range on the next call
@@ -1449,23 +1406,24 @@ object CorpusStore {
     require(consumer.nonEmpty && !consumer.contains("/"),
       s"followCorpus: '$consumer' is not a valid consumer name")
     val (cur, _) = pointer(spark, path)
-    val offPath = s"$path/followers/$consumer"
-    val from =
-      if (GenPointer.exists(spark, offPath))
-        GenPointer.read(spark, offPath)._1
-      else -1
+    val from = followerOffset(spark, path, consumer).getOrElse(-1)
     if (from >= cur) None
     else {
       body(corpusChangesSince(spark, path, from, cur))
-      GenPointer.commit(spark, offPath, cur)
+      GenLog.advance(spark, s"$path/followers/$consumer", cur)
       Some((from, cur))
     }
   }
 
+  /** `consumer`'s acknowledged generation, if it has one. */
+  private[sources] def followerOffset(spark: SparkSession, path: String,
+      consumer: String): Option[Int] =
+    GenLog.bounds(spark, s"$path/followers/$consumer").map(_._1.toInt)
+
   /** Every registered follower and its acknowledged generation —
     * the offsets [[vacuumCorpusSnapshots]] floors retention at
-    * (round 17 — r16 missing item 3). Filesystem listing + one
-    * pointer read per follower; sorted by name.
+    * (round 17 — r16 missing item 3). One listing of the followers
+    * and one of each follower's log; sorted by name.
     */
   def listCorpusFollowers(spark: SparkSession,
       path: String): Seq[(String, Int)] = {
@@ -1475,12 +1433,7 @@ object CorpusStore {
     if (!f.exists(root)) Nil
     else f.listStatus(root).filter(_.isDirectory)
       .map(_.getPath.getName).sorted.toSeq
-      .flatMap { c =>
-        val off = s"$path/followers/$c"
-        if (GenPointer.exists(spark, off))
-          Some(c -> GenPointer.read(spark, off)._1)
-        else None
-      }
+      .flatMap(c => followerOffset(spark, path, c).map(c -> _))
   }
 
   /** Complete a follower's lifecycle: remove its offset so vacuum
@@ -1629,14 +1582,7 @@ object CorpusStore {
     val newBase = binding
       .map { case (_, f) => math.max(b, f + 1) }.getOrElse(requested)
     val f = fs(spark, path)
-    (b until newBase).foreach(i =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/_log/$i"), false))
-    // a publish's temp file for a generation that has a record can
-    // never be linked: a crashed writer left it
-    f.listStatus(new org.apache.hadoop.fs.Path(s"$path/_log")).map(_.getPath)
-      .filter(t => t.getName.startsWith(".") &&
-        t.getName.drop(1).takeWhile(_.isDigit).toIntOption.exists(_ <= g))
-      .foreach(f.delete(_, false))
+    GenLog.prune(spark, s"$path/_log", newBase)
     orphanTrees(spark, path, (newBase to g).map(record(spark, path, _)))
       .foreach { case (dir, buckets, whole) =>
         if (whole) dropTree(spark, path, dir)
@@ -1677,6 +1623,17 @@ object CorpusStore {
     } yield (dir, orphans, orphans.size == buckets.size)
   }
 
+  /** The bucket directories the newest record reads: what a scan of
+    * the committed version lists, and nothing a losing or crashed
+    * writer left.
+    */
+  private[graft] def committedTrees(spark: SparkSession,
+      path: String): Seq[String] = {
+    requireStore(spark, path)
+    head(spark, path).manifest.toSeq.flatMap { case (bk, st) =>
+      st.entries.map(cowEntryDir(path, bk, _)) }
+  }
+
   /** One health row for a COW store — the [[graft.operators
     * .IndexHealth]] stance applied to the corpus itself, and
     * METADATA-scale throughout: occupancy comes from the CURRENT
@@ -1713,7 +1670,7 @@ object CorpusStore {
     *    the per-trigger metadata cost [[BatchLog.compact]] resets;
     *    the flag flips once the combined compact+tail file count
     *    exceeds one, so a maintained store's replay check stays a
-    *    pointer read plus at most one single-file scan.
+    *    watermark read plus at most one single-file scan.
     */
   final case class CowHealth(
       current: Int, base: Int, generations: Int,

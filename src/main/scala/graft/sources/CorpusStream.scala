@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * recovery all come for free.
   *
   * Offsets ARE generation numbers (the store's atomic commit unit):
-  * `getOffset` reads the CURRENT pointer (one metadata read per
+  * `getOffset` reads the newest commit record (one listing per
   * trigger), and `getBatch(start, end)` is exactly
   * [[CorpusStore.corpusChangesSince]](start, end] — O(changes) for
   * delta generations, the at-least-the-changes re-emission contract
@@ -48,8 +48,9 @@ import org.apache.spark.sql.types.StructType
   * retry. `.option("maxGenerationsPerTrigger", n)` caps every batch
   * at n generations past the last one this source handed out: the
   * backlog drains in ceil(N/n) batches, each a normal checkpointed
-  * unit. The source's own high-water pointer (a [[GenPointer]] file
-  * under the stream's PRIVATE metadata directory, advanced in
+  * unit. The source's own high-water mark (a [[GenLog]] whose entry
+  * name is the mark, under the stream's PRIVATE metadata directory,
+  * advanced in
   * `getBatch` — which Spark replays for the last recovered range
   * before asking for new offsets) makes the cap restart-safe: a
   * capped `getOffset` never regresses below what the checkpoint
@@ -66,7 +67,7 @@ import org.apache.spark.sql.types.StructType
   * `.option("consumer", name)` (round 17) registers the stream as a
   * DURABLE FOLLOWER: each getBatch acks the range's committed start
   * generation at `<store>/followers/<name>` (the
-  * [[CorpusStore.followCorpus]] offset file), so the follower-aware
+  * [[CorpusStore.followCorpus]] offset log), so the follower-aware
   * vacuum floors retention at exactly the range the stream still
   * needs — a registered stream survives arbitrary downtime under a
   * maintenance loop instead of dying on the fail-fast. Retire a
@@ -148,28 +149,28 @@ private[sources] class CorpusStreamSource(spark: SparkSession,
   // generation this source ever handed to getBatch, persisted in the
   // stream's private metadata dir. Spark replays getBatch for the
   // last recovered range before constructing a new batch, so by the
-  // first capped getOffset after a restart this pointer is at least
+  // first capped getOffset after a restart this mark is at least
   // the checkpoint's committed end — a capped offer can never
   // regress below it. Untouched (and never written) without the cap.
   private def hwPath = s"$metadataPath/graft-gen-hw"
 
-  // In-memory mirror of the high-water pointer (r20 optimization —
+  // In-memory mirror of the high-water mark (r20 optimization —
   // the stream-floor item: per-trigger metadata reads whose answer
-  // this source itself wrote last). The FILE stays the durable truth
+  // this source itself wrote last). The LOG stays the durable truth
   // a restart recovers from; within one source instance every write
   // goes through [[advanceHighWater]], so the mirror can never lag
-  // the file. All Source methods run on the stream's single
+  // the log. All Source methods run on the stream's single
   // microbatch thread — no synchronization needed.
   private var hwMem: Option[Int] = None
 
   private def highWater: Option[Int] = {
-    if (hwMem.isEmpty && GenPointer.exists(spark, hwPath))
-      hwMem = Some(GenPointer.read(spark, hwPath)._1)
+    if (hwMem.isEmpty)
+      hwMem = GenLog.bounds(spark, hwPath).map(_._1.toInt)
     hwMem
   }
 
   private def advanceHighWater(gen: Int): Unit = {
-    GenPointer.commit(spark, hwPath, gen)
+    GenLog.advance(spark, hwPath, gen)
     hwMem = Some(gen)
   }
 
@@ -346,9 +347,9 @@ private[sources] class CorpusStreamSource(spark: SparkSession,
     org.apache.spark.sql.graft.StreamingFrame.asStreaming(batch)
   }
 
-  // In-memory mirror of the follower pointer (r20, same stance as
-  // hwMem): this source is the pointer's only writer, so after the
-  // first read the file can never hold more than the mirror — the
+  // In-memory mirror of the follower offset (r20, same stance as
+  // hwMem): this source is the offset's only writer, so after the
+  // first read the log can never hold more than the mirror — the
   // monotonicity check no longer needs a read per call, and a
   // non-advancing ack (the steady-state getBatch(start) ack, already
   // covered by the previous trigger's committed-end ack) skips the
@@ -362,17 +363,14 @@ private[sources] class CorpusStreamSource(spark: SparkSession,
     */
   private def ackFollower(gen: Int): Unit =
     consumer.foreach { c =>
-      val offPath = s"$path/followers/$c"
       val prev = followerAckMem.getOrElse {
-        val p =
-          if (GenPointer.exists(spark, offPath))
-            GenPointer.read(spark, offPath)._1
-          else Int.MinValue
+        val p = CorpusStore.followerOffset(spark, path, c)
+          .getOrElse(Int.MinValue)
         followerAckMem = Some(p)
         p
       }
       if (gen > prev) {
-        GenPointer.commit(spark, offPath, gen)
+        GenLog.advance(spark, s"$path/followers/$c", gen)
         followerAckMem = Some(gen)
       }
     }

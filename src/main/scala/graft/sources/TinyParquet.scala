@@ -154,7 +154,7 @@ private[graft] object TinyParquet {
   /** The files a Spark read of `dir` would treat as data, name-sorted:
     * one non-recursive listing, keeping everything but subdirectories
     * and the names Spark's file index hides (`_`- or `.`-prefixed —
-    * `_SUCCESS`, `_WRITER`, `.crc` siblings — and `._COPYING_`
+    * `_SUCCESS`, `.crc` siblings — and `._COPYING_`
     * leftovers).
     */
   def dataFileStatuses(spark: SparkSession, dir: String)

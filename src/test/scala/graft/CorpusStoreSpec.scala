@@ -65,45 +65,54 @@ class CorpusStoreSpec extends SparkSpec {
       v1.orderBy("doc_id").collect().toSeq)
   }
 
-  test("GenPointer hammer: a polling reader never errors or sees a gap/regression while a writer swaps CURRENT in a loop") {
-    // round 16, surfaced by the streaming corpus source (the first
-    // reader polling CURRENT from its own thread): two latent races
-    // on the LOCAL filesystem — (1) ChecksumFs renames the pointer
-    // and its .crc sidecar in two steps, so a read between them threw
-    // "Checksum error: CURRENT"; (2) FileContext's OVERWRITE rename
-    // is delete-then-rename locally, so a read in the gap threw "no
-    // CURRENT". Both fixed in GenPointer (raw-fs pointer I/O + POSIX
-    // atomic rename); this hammer is the regression pin — hundreds of
-    // concurrent swap/read pairs, every read must succeed and be
-    // monotonically non-decreasing.
-    import graft.sources.GenPointer
-    val dir = tmp("graft-genptr")
-    GenPointer.commit(spark, dir, 0)
+  test("GenLog hammer: a polling reader never errors, misses or goes backwards while a writer publishes and prunes entries in a loop") {
+    // a reader polling a log from its own thread (the streaming corpus
+    // source's shape) while a writer publishes entry g and prunes every
+    // entry below it: every read must succeed, return a whole entry
+    // and never regress, including a read whose listed entry the
+    // writer prunes before it is opened
+    import graft.sources.GenLog
+    val dir = s"${tmp("graft-genlog")}/log"
+    def bytes(g: Long) =
+      s"$g ${g / 2}".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    assert(GenLog.publish(spark, dir, 0, bytes(0)))
+    assert(!GenLog.publish(spark, dir, 0, bytes(1)),
+      "an existing entry must not be published twice")
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
     val writer = new Thread(() => {
-      var g = 1
+      var g = 1L
       try while (!stop.get && g <= 400) {
-        GenPointer.commit(spark, dir, g, base = g / 2)
+        assert(GenLog.publish(spark, dir, g, bytes(g)))
+        GenLog.prune(spark, dir, g)
         g += 1
       } catch { case t: Throwable => failure.set(t) }
       finally stop.set(true)
     })
     writer.start()
-    var last = 0
+    var last = 0L
     var reads = 0
     try {
       while (!stop.get) {
-        val (g, b) = GenPointer.read(spark, dir)
-        assert(g >= last, s"pointer regressed: $last -> $g")
-        assert(b == 0 || b == g / 2, s"torn read: ($g, $b)")
+        val (g, b) = GenLog.latest(spark, dir).getOrElse(
+          fail(s"the log read as empty after entry $last"))
+        assert(g >= last, s"log regressed: $last -> $g")
+        assert(new String(b, java.nio.charset.StandardCharsets.UTF_8) ==
+          s"$g ${g / 2}", s"torn read of entry $g")
         last = g
         reads += 1
       }
     } finally { stop.set(true); writer.join() }
     assert(failure.get == null, String.valueOf(failure.get))
     assert(last > 0 && reads > 50, s"hammer too weak: $reads reads")
-    assert(GenPointer.read(spark, dir) == ((400, 200)))
+    assert(GenLog.bounds(spark, dir) == Some((400L, 400L)))
+    // a reader that listed entry 400 before the writer pruned it still
+    // gets an answer: the newer entry
+    assert(GenLog.publish(spark, dir, 401, bytes(401)))
+    GenLog.prune(spark, dir, 401)
+    assert(GenLog.latest(spark, dir).map(_._1) == Some(401L))
+    assert(new java.io.File(dir).list().toSeq == Seq("401"),
+      "publish or prune left a temp file or a pruned entry behind")
   }
 
   test("read-modify-write: next version derives from CURRENT without self-overwrite") {
@@ -436,8 +445,8 @@ class CorpusStoreSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     import graft.operators.Retrieval
-    // a BM25 index past its first append carries CURRENT "1": a
-    // vacuum that took it for a store would rewrite it to "1 1" and
+    // a BM25 index past its first append carries commit records 0 and
+    // 1: a vacuum that took it for a store would prune record 0 and
     // drop generation 0's postings from every later probe
     val bm25 = tmp("graft-cs-guard-bm25")
     Retrieval.writeBm25Index(v0, "doc_id", "text", bm25, numBuckets = 4)
@@ -453,8 +462,12 @@ class CorpusStoreSpec extends SparkSpec {
         .toSeq.sorted
       finally walk.close()
     }
-    val bm25Current = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(bm25, "CURRENT")).toSeq
+    def bm25Log: Seq[(String, Seq[Byte])] = files(bm25)
+      .filter(_.startsWith("commits/")).map(f => f ->
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(bm25, f))
+          .toSeq)
+    val bm25Records = bm25Log
+    assert(bm25Records.map(_._1) == Seq("commits/0", "commits/1"))
     val before = Map(bm25 -> files(bm25), plain -> files(plain))
     val entryPoints: Seq[(String, String => Any)] = Seq(
       "currentGen" -> (p => CorpusStore.currentGen(spark, p)),
@@ -498,8 +511,7 @@ class CorpusStoreSpec extends SparkSpec {
       assert(e.getMessage == s"requirement failed: CorpusStore: $dir is " +
         "not a copy-on-write store", s"$name on $dir: ${e.getMessage}")
     }
-    assert(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(bm25, "CURRENT")).toSeq == bm25Current)
+    assert(bm25Log == bm25Records)
     assert(Map(bm25 -> files(bm25), plain -> files(plain)) == before)
   }
 }

@@ -117,8 +117,8 @@ class CowIngestLogSpec extends SparkSpec {
       CorpusStore.cowIngestBatch(path)(
         Seq((100L + i, s"streamed $i")).toDF("doc_id", "text"), i.toLong)
     }
-    // crash BEFORE the swap: a half-written fold dir exists but no
-    // pointer — the guard keeps reading the committed state (tail)
+    // crash BEFORE the publish: a half-written fold dir exists but no
+    // record — the guard keeps reading the committed state (tail)
     val orphan = new java.io.File(s"${logPath}_compact/gen=0")
     orphan.mkdirs()
     java.nio.file.Files.write(
@@ -127,13 +127,13 @@ class CowIngestLogSpec extends SparkSpec {
     (0 to 3).foreach(i =>
       assert(BatchLog.contains(spark, logPath, i.toLong)))
     assert(!BatchLog.contains(spark, logPath, 9L))
-    // the retried fold overwrites the orphan and commits
+    // the retried fold writes past the orphan and commits
     BatchLog.compact(spark, logPath)
     (0 to 3).foreach(i =>
       assert(BatchLog.contains(spark, logPath, i.toLong)))
     assert(BatchLog.watermark(spark, logPath).contains(3L))
 
-    // crash AFTER the swap, mid tail-delete: a folded tail file
+    // crash AFTER the publish, mid tail-delete: a folded tail file
     // survives as a duplicate — harmless to the guard, dedup'd by
     // the next fold
     CorpusStore.cowIngestBatch(path)(
@@ -148,10 +148,8 @@ class CowIngestLogSpec extends SparkSpec {
     assert(BatchLog.tailFiles(spark, logPath).isEmpty)
     assert(BatchLog.contains(spark, logPath, 4L))
     // exactly one row per batch id survived the duplicate
-    val log = spark.read.parquet(
-      s"${logPath}_compact/gen=" +
-        graft.sources.GenPointer.read(spark, s"${logPath}_compact")._1 +
-        "/LOG.parquet")
+    // the tail is empty, so the whole log is the committed fold file
+    val log = BatchLog.readAll(spark, logPath).get
     assert(log.groupBy("batch_id").count().where(col("count") > 1)
       .count() == 0, "fold must dedup replay-window duplicates")
   }

@@ -169,4 +169,41 @@ class IndexHealthSpec extends SparkSpec {
     assert(IndexHealth.maintain(spark, dir, dstPath = dir)
       .action == "none")
   }
+
+  test("dataFiles counts only the trees the committed version reads: a losing or crashed writer's orphan tree leaves it unchanged") {
+    import graft.sources.CorpusStore
+    import scala.jdk.CollectionConverters._
+    // copy one of the index's data files to `rel`, a tree no commit
+    // names — where a writer that lost its publish, or crashed before
+    // it, leaves its files
+    def plantOrphan(root: String, from: String, rel: String): Unit = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, from))
+      val file = try walk.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      finally walk.close()
+      val dst = java.nio.file.Paths.get(root, rel)
+      java.nio.file.Files.createDirectories(dst.getParent)
+      java.nio.file.Files.copy(file, dst)
+    }
+    val cow = tmp("graft-ih-orphan-cow")
+    CorpusStore.writeCorpusCow((1 to 40).map(i => (i.toLong, s"doc $i"))
+      .toDF("doc_id", "text"), cow, "doc_id", numBuckets = 8)
+    CorpusStore.appendDeltaToCorpusCow(
+      Seq((5L, "five v1")).toDF("doc_id", "text"), cow)
+    val cowBefore = IndexHealth.report(spark, cow)
+    assert(cowBefore.dataFiles > 0, cowBefore.toString)
+    plantOrphan(cow, "parts",
+      "deltas/gen=2/crashed-writer/_cs_bucket=0/part-orphan.parquet")
+    assert(IndexHealth.report(spark, cow).dataFiles == cowBefore.dataFiles)
+
+    val bm = tmp("graft-ih-orphan-bm25")
+    Retrieval.writeBm25Index(Seq((1L, "spark shuffle join"),
+      (2L, "window aggregate")).toDF("doc_id", "text"), "doc_id", "text",
+      bm, numBuckets = 4)
+    val bmBefore = IndexHealth.report(spark, bm)
+    assert(bmBefore.dataFiles > 0, bmBefore.toString)
+    plantOrphan(bm, "postings",
+      "postings/gen=1/writer=crashed/tbucket=0/part-orphan.parquet")
+    assert(IndexHealth.report(spark, bm).dataFiles == bmBefore.dataFiles)
+  }
 }

@@ -132,8 +132,11 @@ class RetrievalSpec extends SparkSpec {
       val gens = new java.io.File(s"$dir/postings").listFiles()
         .map(_.getName).filter(_.startsWith("gen=")).sorted.toSeq
       assert(gens == Seq("gen=3"), gens.toString)
-      assert(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, "CURRENT")).trim == "3 3")
+      // the committed record is generation 3 with base 3, and the
+      // vacuum pruned the records below it
+      assert(Retrieval.committed(spark, dir) match {
+        case (g, rec) => g == 3 && rec.base == 3 })
+      assert(new java.io.File(s"$dir/commits").list().toSeq == Seq("3"))
       // an append AFTER compaction preserves the base pointer: the
       // probe reads gens 3..4 only and equals the full in-memory path
       Retrieval.appendToBm25Index(
@@ -183,9 +186,11 @@ class RetrievalSpec extends SparkSpec {
       assert(spark.read.parquet(s"$dir/postings")
         .where(col("doc_id") === 2).count() == 0,
         "compaction left the deleted doc's postings")
-      assert(
-        spark.read.parquet(s"$dir/stats/gen=1").collect().toSeq ==
-        spark.read.parquet(s"$fresh/stats/gen=0").collect().toSeq,
+      def stats(p: String) = {
+        val rec = Retrieval.committed(spark, p)._2
+        (rec.nDocs, rec.nTokens)
+      }
+      assert(stats(dir) == stats(fresh),
         "compacted stats diverged from the never-held index")
       assertSameRows(
         Retrieval.bm25AgainstIndex(probes, "query_id", "query_text", dir,
@@ -212,12 +217,10 @@ class RetrievalSpec extends SparkSpec {
     val scope = new Dedup.CacheScope
     try {
       // simulate a crash AFTER the generation-1 postings+stats writes
-      // but BEFORE the CURRENT swap: run the real append, then roll
-      // the pointer back to generation 0
+      // but BEFORE the record's publish: run the real append, then
+      // remove its record
       Retrieval.appendToBm25Index(batch, "doc_id", "text", dir)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(dir, "CURRENT"),
-        "0".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "commits", "1"))
       // the orphan generation is invisible: postings, df, N and avgdl
       // all still describe the base corpus (score-exact, not just
       // row-set-equal — a stats/postings divergence would shift scores)
@@ -226,7 +229,7 @@ class RetrievalSpec extends SparkSpec {
           k = 10),
         Retrieval.bm25(base, "doc_id", "text", probes, "query_id",
           "query_text", k = 10, scope = scope))
-      // the retry overwrites the orphan and commits: batch lands
+      // the retry writes past the orphan and commits: batch lands
       // exactly once, never doubled
       Retrieval.appendToBm25Index(batch, "doc_id", "text", dir)
       assertSameRows(
